@@ -35,7 +35,6 @@ import re
 import secrets
 import threading
 import time
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -3662,36 +3661,16 @@ class Engine:
             "q50 double, q75 double, count bigint, null_percentage double",
         )
 
-    def stream(self, q: str, dialect: str = "pg", job_group: str | None = None):
-        """→ (schema, iterator of row tuples). Partition-at-a-time pull.
-
-        The job group is set INSIDE the iterator — i.e. on whichever
-        thread actually consumes the rows and therefore launches the
-        Spark jobs (job groups are thread-local; setting it on the
-        calling thread is a no-op if consumption happens elsewhere —
-        ADVICE r1). Single-threaded consumers (the CH handler thread)
-        get correct cancel semantics this way; multi-threaded consumers
-        should use stream_batches() instead."""
-        df = self.query(q, dialect)
-        schema = df.schema
-        sc = self.spark.sparkContext
-
-        def rows() -> Iterator[tuple]:
-            if job_group:
-                sc.setJobGroup(job_group, q[:100], interruptOnCancel=True)
-            try:
-                for row in df.toLocalIterator(prefetchPartitions=True):
-                    yield tuple(row)
-            finally:
-                if job_group:
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-
-        return schema, rows()
-
     def stream_batches(
-        self, q: str, dialect: str = "pg", job_group: str | None = None, batch_size: int = 1000
+        self,
+        q: str,
+        dialect: str = "pg",
+        job_group: str | None = None,
+        batch_size: int = 1000,
+        df: DataFrame | None = None,
     ) -> tuple:
-        """→ (schema, batch stream) for async servers.
+        """→ (schema, batch stream) for async servers. `df` streams an
+        already-built result (DML RETURNING); `q` then only names the job.
 
         ALL Spark actions run on ONE dedicated producer thread that sets
         the job group before iterating — so cancel(job_group) reliably
@@ -3701,7 +3680,8 @@ class Engine:
         thread-local job group would be lost — ADVICE r1). A bounded
         queue gives backpressure: the producer stalls after 4 batches if
         the socket is slow, so server memory stays O(batch)."""
-        df = self.query(q, dialect)
+        if df is None:
+            df = self.query(q, dialect)
         return df.schema, _BatchStream(self.spark, df, q, job_group, batch_size)
 
     def _analyze(self, table: str | None) -> None:
@@ -3898,11 +3878,6 @@ class Engine:
         raise PgError(
             "0A000", f"RETURNING is not supported for this statement: {base}"
         )
-
-    def stream_df(self, df, desc: str, job_group: str | None = None, batch_size: int = 1000):
-        """→ (schema, batch stream) for an already-built DataFrame (the
-        RETURNING path) — same producer-thread contract as stream_batches."""
-        return df.schema, _BatchStream(self.spark, df, desc, job_group, batch_size)
 
     def describe_returning(self, q: str):
         """Schema of a DML RETURNING statement WITHOUT executing it (the

@@ -28,7 +28,6 @@ SERVER_VERSION = "16.0-sparksql-4.1"  # pg_conn.go:22 pattern
 _LIMIT_NM = re.compile(r"\blimit\s+(\d+)\s*,\s*(\d+)", re.IGNORECASE)
 _VERSION = re.compile(r"\bversion\(\)", re.IGNORECASE)
 _SELECT_TABLE = re.compile(r"^(\s*select\s+)table\b", re.IGNORECASE)
-_SHOW_TXN_RO = re.compile(r"^\s*show\s+transaction_read_only\s*;?\s*$", re.IGNORECASE)
 _SET_NOOP = re.compile(
     r"^\s*set\s+(extra_float_digits|application_name|search_path|statement_timeout|client_encoding|datestyle|timezone)\b",
     re.IGNORECASE,
@@ -2346,8 +2345,6 @@ def rewrite_ch_query(q: str) -> str:
 
 def rewrite_pg_query(q: str) -> str:
     """PG-path rewrites (pg_conn.go:444-453 intercept list)."""
-    if _SHOW_TXN_RO.match(q) or q.strip().lower().startswith("show transaction_read_only"):
-        return "SELECT 0 AS transaction_read_only"
     if _SET_NOOP.match(q):
         return "SELECT 1 LIMIT 0"  # pg_conn.go:448-453 ack shape
     return rewrite_common(q)

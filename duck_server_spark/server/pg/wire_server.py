@@ -5,9 +5,14 @@ Reference parity (/root/reference, SURVEY.md §2A):
   (wire.go:53-58), CancelRequest routed (wire.go:35-61), protocol 3.0
   startup params parsed (message.go:79-144).
 - A3 framing: type byte + int32 length (wire.go:10-16).
-- A4 simple query ('Q'): intercept list (CREATE USER pg_conn.go:282,
-  empty → EmptyQueryResponse :295, DISCARD ALL :299, COPY FROM STDIN
-  :302, show transaction_read_only :305) then execute + stream
+- A4 simple query ('Q'): the reference hands every statement, whichever
+  protocol it arrives on, to one delegation point (c.conn.Prepare,
+  pg_conn.go:314). Here that point is PgConnection._route: simple Query,
+  Describe and Execute all classify a statement there, once (transaction
+  control, SQL PREPARE/EXECUTE, DISCARD ALL :299, DEALLOCATE, SET/RESET,
+  COPY :302, SHOW of a GUC incl. transaction_read_only :305, then a
+  write or a query), so both protocols answer a statement alike. Empty
+  → EmptyQueryResponse :295. Results stream as
   RowDescription/DataRow/CommandComplete (pg_conn.go:215-272). The
   reference's CommandComplete tag is literally "(N row)"
   (pg_conn.go:271) — replicated.
@@ -31,6 +36,10 @@ Reference parity (/root/reference, SURVEY.md §2A):
 
 Concurrency: asyncio sockets; every Spark action runs in a worker thread
 (run_in_executor) so one slow query never blocks other connections.
+Every result stream (SELECT, COPY TO, DML RETURNING, portal Execute) is
+pulled by one loop, PgConnection._drain, from a _BatchStream whose
+producer thread owns the statement's job group; an encoder per target
+turns each batch into DataRows or CopyData.
 """
 
 from __future__ import annotations
@@ -41,6 +50,7 @@ import csv
 import hashlib
 import hmac
 import io
+import itertools
 import re
 import secrets
 import struct
@@ -59,7 +69,7 @@ from duck_server_spark.engine.types import (
 )
 from duck_server_spark.plans import rewrites
 from duck_server_spark.sources.ingest import CsvChunkSplitter, csv_rows_null_aware
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 PROTO_V3 = 196608
 SSL_REQUEST = 80877103
@@ -77,10 +87,6 @@ _COPY_OUT = re.compile(
     r"\s+to\s+stdout(?P<opts>[^;]*);?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_CREATE_USER = re.compile(
-    r"^\s*create\s+user\s+(\w+)\s+with\s+password\s+'([^']*)'\s*;?\s*$", re.IGNORECASE
-)
-_SHOW_TXN = re.compile(r"^\s*show\s+transaction_read_only", re.IGNORECASE)
 # generic `SHOW <guc>` (round 7, narrowed round 8 per ADVICE r7): only
 # names present in the shared GUC table (engine/gucs.py — the same table
 # ParameterStatus advertises) are intercepted here; EVERY other SHOW
@@ -88,8 +94,7 @@ _SHOW_TXN = re.compile(r"^\s*show\s+transaction_read_only", re.IGNORECASE)
 # VIEWS/FUNCTIONS, DuckDB's `SHOW <table>` describe shortcut, and
 # `SHOW ALL` keep working (the round-7 blanket interception 42704'd all
 # of these). The regex admits identifiers plus the dotted custom-GUC
-# namespace form, and the alias is backtick-quoted, so a reserved word
-# or odd name can't inject into the rendered SELECT (ADVICE r7 low).
+# namespace form.
 _SHOW_GUC = re.compile(r"^\s*show\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.IGNORECASE)
 _DISCARD = re.compile(r"^\s*discard\s+all\s*;?\s*$", re.IGNORECASE)
 # Session-scoped SET/RESET (round 8): `SET app_name = 'x'; SHOW
@@ -113,11 +118,12 @@ _RESET_GUC = re.compile(
 # rendering the UTC-pinned engine does not perform — those keep the
 # existing accept-and-ignore ack, and SHOW keeps reporting the engine's
 # REAL value (honest, like the reference's fixed ParameterStatus table).
-# statement_timeout IS enforced (ADVICE r8): _run_query/_execute_portal
-# arm a timer that cancels the statement's job group and surface PG's
-# 57014. extra_float_digits dropped to accept-and-ignore for the same
-# honesty rule (floats already render shortest-round-trip, the PG 12+
-# default behavior — SET can't change what the engine does).
+# statement_timeout IS enforced (ADVICE r8): _drain arms a timer over
+# every stream that runs a statement's query (SELECT, COPY TO, portal
+# Execute); it cancels the job group and surfaces PG's 57014.
+# extra_float_digits dropped to accept-and-ignore for the same honesty
+# rule (floats already render shortest-round-trip, the PG 12+ default
+# behavior — SET can't change what the engine does).
 _SETTABLE_GUCS = frozenset(
     ("application_name", "search_path", "statement_timeout")
 )
@@ -139,8 +145,9 @@ def _parse_timeout_seconds(raw: str | None) -> float | None:
 
 class _StatementTimer:
     """Arms a loop.call_later that cancels a statement's job group when
-    the session's statement_timeout elapses. `fired` tells the error
-    path to report PG's 57014 instead of the raw cancelled-job error."""
+    the session's statement_timeout elapses (group None: never armed).
+    `fired` tells the error path to report PG's 57014 instead of the raw
+    cancelled-job error."""
 
     # cancelJobGroup interrupts only ACTIVE jobs — a timeout that fires
     # during analysis (before the first job is submitted) must keep
@@ -148,11 +155,11 @@ class _StatementTimer:
     # submitted just after the fire would run to completion.
     _REFIRE_S = 0.25
 
-    def __init__(self, conn, group: str):
+    def __init__(self, conn, group: str | None):
         self.fired = False
         self._handle = None
         self._sec = _parse_timeout_seconds(conn.session_gucs.get("statement_timeout"))
-        if self._sec is not None:
+        if self._sec is not None and group is not None:
             self._loop = asyncio.get_running_loop()
             self._engine = conn.engine
             self._group = group
@@ -242,13 +249,12 @@ class Portal:
     # every column, else per-column). Honored — the reference always
     # sends text (pg_conn.go:379, message.go:449-455).
     result_formats: list = field(default_factory=list)
-    schema: object = None  # set when the stream opens (binary needs dtypes)
     # Suspended-execution state (PG portal protocol): an open batch
-    # stream plus rows already fetched but not yet sent. Execute with
+    # stream plus the portal's DataRow encoder, which holds the schema
+    # and the rows already fetched but not yet sent. Execute with
     # maxRows pauses here; a re-Execute resumes. None = not started.
     stream: object = None
-    buf: object = None  # collections.deque of pending rows
-    done: bool = False
+    rows: "_DataRows | None" = None
     # Per-portal Spark job group: several portals can be suspended
     # concurrently on one connection, and releasing one must cancel ONLY
     # its own jobs — a shared group would kill the others' producers.
@@ -287,6 +293,18 @@ class PgConnection:
         payload = b"SERROR\x00" + b"C" + code.encode() + b"\x00M" + message.encode() + b"\x00\x00"
         self._send(b"E", payload)
         self.in_error = True
+
+    def send_exception(self, e: Exception) -> None:
+        """ErrorResponse for a failed statement: the first line of its
+        message, and its SQLSTATE — PgError's pgcode, else the engine's
+        own (SparkThrowable.getSqlState), else the generic SQL-0000. An
+        open transaction block becomes failed (E)."""
+        if self.txn is not None:
+            self.txn.status = "E"
+        code = getattr(e, "pgcode", None)
+        if code is None and hasattr(e, "getSqlState"):
+            code = e.getSqlState()
+        self.send_error(str(e).strip().split("\n")[0][:500], code or "SQL-0000")
 
     def send_ready(self) -> None:
         # ReadyForQuery carries the real transaction status: I idle,
@@ -340,20 +358,6 @@ class PgConnection:
 
     def send_command_complete(self, tag: str) -> None:
         self._send(b"C", tag.encode() + b"\x00")
-
-    def send_local_result(self, cols: list[str], rows: list[tuple]) -> None:
-        """Settings results served straight from the wire layer — same
-        T/D/C bytes as the engine path (all-VARCHAR schema, the shared
-        `(n row)` tag), but no rewrite pipeline, no Spark job, no
-        statement timer. A SHOW of a known GUC is a dictionary read;
-        routing it through a distributed query costs ~100 ms of pure
-        overhead per call and lets an armed sub-second
-        statement_timeout cancel its own bookkeeping query."""
-        schema = StructType([StructField(c, StringType()) for c in cols])
-        self.send_row_description(schema)
-        for r in rows:
-            self.send_data_row(r)
-        self.send_command_complete(f"({len(rows)} row)")  # pg_conn.go:271
 
     # ----------------------------------------------------------- startup
 
@@ -514,12 +518,7 @@ class PgConnection:
                     self._close_msg(payload)
                 # unknown types silently skipped (message.go lazy skip)
             except Exception as e:  # noqa: BLE001 — engine errors → ErrorResponse
-                if self.txn is not None:
-                    self.txn.status = "E"  # failed transaction block
-                self.send_error(
-                    str(e).strip().split("\n")[0][:500],
-                    getattr(e, "pgcode", None) or "SQL-0000",
-                )
+                self.send_exception(e)
             await self.writer.drain()
 
     # ------------------------------------------------------ simple query
@@ -537,144 +536,185 @@ class PgConnection:
             return
         try:
             for q in stmts:
-                try:
-                    await self._exec_one(q)
-                except Exception as e:  # noqa: BLE001 — abort remaining stmts
-                    if self.txn is not None:
-                        self.txn.status = "E"  # failed transaction block
-                    self.send_error(
-                        str(e).strip().split("\n")[0][:500],
-                        getattr(e, "pgcode", None) or "SQL-0000",
-                    )
-                    break
+                await self._route(q)
+        except Exception as e:  # noqa: BLE001 — abort remaining stmts
+            self.send_exception(e)
         finally:
             self.send_ready()
 
-    async def _exec_one(self, q: str) -> None:
+    async def _route(
+        self, q: str, portal: Portal | None = None, max_rows: int = 0, describe: bool = False
+    ) -> StructType | None:
+        """The one statement router. Simple Query (no portal), Describe
+        (`describe`) and Execute (a portal and its maxRows) all classify
+        a statement here, once, in this order. Query and Execute run it
+        and send its result; Execute's rows take the Bind result formats
+        (its RowDescription came from Describe). Describe runs nothing:
+        → the result shape, None for NoData."""
+        loop = asyncio.get_running_loop()
         m = _TXN_CTL.match(q)
         if m:
-            await self._txn_control(_TXN_TAGS[m.group(1).split()[0].lower()])
-            return
+            if not describe:
+                await self._txn_control(_TXN_TAGS[m.group(1).split()[0].lower()])
+            return None
         if self.txn is not None and self.txn.status == "E":
             # aborted transaction block: everything except COMMIT/ROLLBACK
-            # is rejected until the block ends (PG error 25P02)
-            self.send_error(
-                "current transaction is aborted, commands ignored until end of transaction block",
+            # is rejected until the block ends
+            raise PgError(
                 "25P02",
+                "current transaction is aborted, commands ignored until end of transaction block",
             )
-            return
-        # SQL-level PREPARE/EXECUTE intercept BEFORE the transaction
-        # rewrite: the stored statement text must stay pristine (it can
-        # outlive the transaction; staged identifiers rewrite at EXECUTE
-        # time instead, so read-your-writes still holds for the expansion)
+        # SQL-level PREPARE/EXECUTE BEFORE the transaction rewrite: the
+        # stored statement text must stay pristine (it can outlive the
+        # transaction; staged identifiers rewrite at EXECUTE time
+        # instead, so read-your-writes still holds for the expansion)
         m = _PREPARE_SQL.match(q)
         if m:
-            self._prepare_stmt_sql(m.group(1), m.group(2), m.group(3))
-            self.send_command_complete("PREPARE")
-            return
+            if not describe:
+                self._prepare_stmt_sql(m.group(1), m.group(2), m.group(3))
+                self.send_command_complete("PREPARE")
+            return None
         m = _EXECUTE_SQL.match(q)
-        if m:
+        if m:  # the expanded statement routes on normally
             q = self._expand_execute_sql(m.group(1), m.group(2))
-            # fall through: the expanded statement dispatches normally
-        if self.txn is not None:
-            loop = asyncio.get_running_loop()
+        if self.txn is not None and describe:
+            q = self.txn.rewrite(q)  # read-your-writes, nothing staged
+        elif self.txn is not None:
             # transactional DDL (round 5): CREATE/DROP TABLE/VIEW inside
             # BEGIN..COMMIT stage catalog intents — applied on COMMIT,
             # vaporized on ROLLBACK (engine/transactions.py)
             tag = await loop.run_in_executor(None, self.txn.intercept_ddl, q)
             if tag is not None:
                 self.send_command_complete(tag)
-                return
+                return None
             # stage the DML target (first touch clones it) and redirect all
             # staged identifiers to their shadows — runs Spark jobs, so off
             # the event loop
             q = await loop.run_in_executor(None, self.txn.prepare, q)
-        m = _CREATE_USER.match(q)
-        if m:
-            self.engine.create_user(m.group(1), m.group(2))
-            self.send_command_complete("CREATE USER")  # pg_conn.go:291
-            return
         if _DISCARD.match(q):
-            self.stmts.clear()
-            for p in self.portals.values():
-                self._release_portal(p)
-            self.portals.clear()
-            self.session_gucs.clear()  # DISCARD ALL resets session GUCs too
-            self.send_command_complete("DISCARD ALL")
-            return
-        tag = await self._intercept_set_reset(q)
-        if tag is not None:
-            self.send_command_complete(tag)
-            return
-        q = self._substitute_session_settings(q)
+            if not describe:
+                self.stmts.clear()
+                for p in self.portals.values():
+                    self._release_portal(p)
+                self.portals.clear()
+                self.session_gucs.clear()  # DISCARD ALL resets session GUCs too
+                self.send_command_complete("DISCARD ALL")
+            return None
         m = _DEALLOCATE.match(q)
         if m:
-            name = m.group(1).strip('"')
-            if name.lower() == "all":
-                self.stmts.clear()
-            elif self.stmts.pop(name, None) is None:
-                self.send_error(
-                    f'prepared statement "{name}" does not exist', "26000"
-                )
-                return
-            self.send_command_complete("DEALLOCATE")
-            return
+            if not describe:
+                name = m.group(1).strip('"')
+                if name.lower() == "all":
+                    self.stmts.clear()
+                elif self.stmts.pop(name, None) is None:
+                    raise PgError("26000", f'prepared statement "{name}" does not exist')
+                self.send_command_complete("DEALLOCATE")
+            return None
+        if describe and (_SET_GUC.match(q) or _RESET_GUC.match(q)):
+            return None
+        tag = None if describe else await self._intercept_set_reset(q)
+        if tag is not None:
+            self.send_command_complete(tag)
+            return None
+        q = self._substitute_session_settings(q)
         m = _COPY_IN.match(q)
         if m:
-            await self._copy_in(m.group(1), m.group(3))
-            return
+            if not describe:
+                await self._copy_in(m.group(1), m.group(3))
+            return None
         m = _COPY_OUT.match(q)
         if m:
-            await self._copy_out(m)
-            return
-        if _SHOW_TXN.match(q):
-            await self._run_query("SELECT 0 AS transaction_read_only", send_row_desc=True)
-            return
+            if not describe:
+                await self._copy_out(m)
+            return None
+        local = self._show_local(q)
+        if local is not None:
+            schema, rows = local
+            if describe:
+                return schema
+            out = _DataRows(self, portal)
+            out.begin(schema)
+            out.send(rows)
+            out.end()
+            return None
+        if _WRITE_VERB.match(q):
+            if describe:
+                # DML RETURNING: schema from a zero-row projection over
+                # the target; every other write is NoData — PG never
+                # executes a statement to describe it
+                return await loop.run_in_executor(None, self.engine.describe_returning, q)
+            ret = await loop.run_in_executor(None, self.engine.execute_returning, q, "pg")
+            if ret is None:
+                tag = await loop.run_in_executor(None, self.engine.execute, q, "pg")
+                self.send_command_complete(tag)
+                return None
+            # RETURNING rows + the DML tag (PG shape). The affected rows
+            # are already materialized, and the write has committed, so
+            # the drain is untimed: a 57014 now would misreport the write
+            df, tag = ret
+            await self._drain(
+                lambda: self.engine.stream_batches(tag, "pg", self.job_group, df=df),
+                _DataRows(self, portal, tag),
+                None,
+            )
+            return None
+        if describe:
+            return await loop.run_in_executor(None, lambda: self.engine.query(q, "pg").schema)
+        if portal is None:
+            await self._drain(
+                lambda: self.engine.stream_batches(q, "pg", self.job_group),
+                _DataRows(self),
+                self.job_group,
+            )
+            return None
+        # Execute honors maxRows (PortalSuspended + resumable portal) —
+        # the reference parses it then ignores it (quirk Q5,
+        # message.go:485 vs pg_conn.go:509-531); JDBC setFetchSize drives
+        # real clients through this path.
+        self._portal_seq += 1
+        portal.group = f"{self.job_group}-p{self._portal_seq}"
+        self.active_portal_groups.add(portal.group)
+        portal.rows = _DataRows(self, portal)
+        await self._run_portal(
+            portal, max_rows, lambda: self.engine.stream_batches(q, "pg", portal.group)
+        )
+        return None
+
+    def _show_local(self, q: str) -> tuple[StructType, list[tuple]] | None:
+        """`SHOW <guc>` answered from this connection's SET overlay and
+        the shared GUC table (engine/gucs.py — the one ParameterStatus
+        advertises): → (schema, rows), or None for every other SHOW form,
+        which the engine runs (Spark SHOW verbs, DuckDB's SHOW <table>,
+        SHOW ALL without a session overlay). A GUC read is a dictionary
+        lookup: no rewrite pipeline, no Spark job, no statement timer —
+        a distributed query costs ~100 ms per call and would let a
+        sub-second statement_timeout cancel its own bookkeeping."""
         m = _SHOW_GUC.match(q)
-        if m and m.group(1).lower() == "all" and self.session_gucs:
+        if m is None:
+            return None
+        name = m.group(1).lower()
+        if name == "transaction_read_only":
+            # pgjdbc's probe; the int4 0 of pg_conn.go:305's SELECT
+            return StructType([StructField(name, IntegerType())]), [(0,)]
+        if name == "all":
+            if not self.session_gucs:
+                return None
             # SHOW ALL reflects THIS session's overlay (PG semantics);
             # the engine's table carries only the shared defaults
             rows = {k: (v[0], v[1]) for k, v in _gucs.ALL_GUCS.items()}
             for k, v in self.session_gucs.items():
                 rows[k] = (v, rows.get(k, ("", "Session-defined setting."))[1])
-            self.send_local_result(
-                ["name", "setting", "description"],
-                [(k, s, d) for k, (s, d) in sorted(rows.items())],
-            )
-            return
-        if m:
-            name = m.group(1).lower()
-            val = (
-                self.session_gucs[name]
-                if name in self.session_gucs
-                else _gucs.guc_value(name)
-            )
-            if val is not None:
-                self.send_local_result([name], [(val,)])
-                return
-            if "." in name and not name.startswith("spark."):
-                # custom-namespace GUC that was never SET in this
-                # session: PG's exact 42704, never a Spark parse error
-                # (spark.* keys fall through — engine configuration)
-                self.send_error(
-                    f'unrecognized configuration parameter "{name}"', "42704"
-                )
-                return
-            # not a known GUC: fall through to engine.query — Spark SHOW
-            # verbs, DuckDB's SHOW <table> shortcut, SHOW ALL (ADVICE r7)
-        if _WRITE_VERB.match(q) and not q.lower().startswith(("select", "with")):
-            loop = asyncio.get_running_loop()
-            # DML RETURNING: rows + the DML command tag (PG shape)
-            ret = await loop.run_in_executor(
-                None, self.engine.execute_returning, q, "pg"
-            )
-            if ret is not None:
-                await self._stream_returning(ret, send_row_desc=True)
-                return
-            tag = await loop.run_in_executor(None, self.engine.execute, q, "pg")
-            self.send_command_complete(tag)
-            return
-        await self._run_query(q, send_row_desc=True)
+            cols = ("name", "setting", "description")
+            return _text_schema(cols), [(k, s, d) for k, (s, d) in sorted(rows.items())]
+        val = self.session_gucs.get(name, _gucs.guc_value(name))
+        if val is not None:
+            return _text_schema((name,)), [(val,)]
+        if "." in name and not name.startswith("spark."):
+            # custom-namespace GUC never SET in this session: PG's exact
+            # 42704, never a Spark parse error (spark.* keys are engine
+            # configuration and fall through)
+            raise PgError("42704", f'unrecognized configuration parameter "{name}"')
+        return None
 
     def _prepare_stmt_sql(self, name_raw: str, types_csv: str | None, body: str) -> None:
         """SQL-level `PREPARE name [(types)] AS stmt` → same statement map
@@ -742,62 +782,37 @@ class PgConnection:
                     tag = "ROLLBACK"
         self.send_command_complete(tag)
 
-    async def _stream_returning(self, ret, send_row_desc: bool) -> None:
-        """Stream a DML RETURNING result: the affected-row DataFrame is
-        already materialized (checkpointed) by the engine, so this only
-        drains it — then the DML command tag (INSERT 0 n / UPDATE n /
-        DELETE n), matching PG's RETURNING protocol shape."""
-        df, tag = ret
+    async def _drain(self, open_stream, out, timer_group: str | None):
+        """The one batch-drain loop, for SELECT, COPY TO, DML RETURNING
+        and portal Execute. `open_stream` runs on a worker thread and
+        returns (schema, _BatchStream): the stream's producer thread owns
+        the job group (so CancelRequest interrupts exactly this
+        statement — run_in_executor pool threads would lose the
+        thread-local group), and its bounded queue keeps server memory
+        O(batch). Each batch goes to the encoder `out`, then the socket
+        drains once. `timer_group` arms statement_timeout over the whole
+        statement, analysis included; None leaves it untimed.
+        → the still-open stream when `out` is full (Execute's maxRows),
+        else None: the stream is closed on every other exit."""
         loop = asyncio.get_running_loop()
-        schema, stream = await loop.run_in_executor(
-            None, lambda: self.engine.stream_df(df, tag, self.job_group)
-        )
-        if send_row_desc:
-            self.send_row_description(schema)
+        # disarmed on EVERY exit — including an analysis error raised by
+        # open_stream before any row flows (a leaked armed timer re-fires
+        # forever and cancels the connection's job group under later
+        # statements)
+        timer = _StatementTimer(self, timer_group)
+        stream = kept = None
         try:
+            schema, stream = await loop.run_in_executor(None, open_stream)
+            out.begin(schema)
             while True:
+                if out.full:
+                    kept = stream
+                    return kept
                 batch = await loop.run_in_executor(None, stream.next_batch)
                 if batch is None:
                     break
-                for row in batch:
-                    self.send_data_row(row)
+                out.send(batch)
                 await self.writer.drain()
-        except (ConnectionResetError, BrokenPipeError, asyncio.CancelledError):
-            stream.close()
-            raise
-        finally:
-            stream.close()
-        self.send_command_complete(tag)
-
-    async def _run_query(self, q: str, send_row_desc: bool) -> None:
-        """Stream a query through a dedicated-thread batch stream: the
-        producer thread owns the job group (so CancelRequest interrupts
-        exactly this query — run_in_executor pool threads would lose the
-        thread-local group), the event loop only drains a queue."""
-        loop = asyncio.get_running_loop()
-        # the timer must be disarmed on EVERY exit — including an
-        # analysis error raised by stream_batches before any row flows
-        # (review finding: a leaked armed timer re-fires forever and
-        # cancels the connection's shared job group under later queries)
-        timer = _StatementTimer(self, self.job_group)
-        stream = None
-        n = 0
-        try:
-            schema, stream = await loop.run_in_executor(
-                None, lambda: self.engine.stream_batches(q, "pg", self.job_group)
-            )
-            if send_row_desc:
-                self.send_row_description(schema)
-            while True:
-                batch = await loop.run_in_executor(None, stream.next_batch)
-                if batch is None:
-                    break
-                for row in batch:
-                    self.send_data_row(row)
-                    n += 1
-                await self.writer.drain()
-        except (ConnectionResetError, BrokenPipeError, asyncio.CancelledError):
-            raise  # client went away — finally closes the stream/job
         except Exception:
             if timer.fired:  # enforced statement_timeout (ADVICE r8)
                 raise PgError(
@@ -806,9 +821,10 @@ class PgConnection:
             raise
         finally:
             timer.disarm()
-            if stream is not None:
+            if stream is not None and stream is not kept:
                 stream.close()
-        self.send_command_complete(f"({n} row)")  # pg_conn.go:271 literal tag
+        out.end()
+        return None
 
     # ------------------------------------------------------ COPY FROM STDIN
 
@@ -866,12 +882,9 @@ class PgConnection:
         self.send_command_complete(f"COPY {appender.total}")  # pg_conn.go:620
 
     async def _copy_out(self, m: "re.Match[str]") -> None:
-        """COPY ... TO STDOUT: CopyOutResponse, one CopyData per batch,
-        CopyDone, COPY-n tag. Streams through the same batch pipeline as
-        SELECT (dedicated producer thread owns the job group, driver
-        never holds the full result). Formats: PG text (default — tab
-        separators, \\N nulls, backslash escapes) and CSV (optional
-        HEADER), matching what psql \\copy and JDBC CopyManager expect."""
+        """COPY ... TO STDOUT: the SELECT it names, through the same
+        drain and statement timer as a SELECT, encoded as CopyData
+        (_CopyRows)."""
         q = m.group("query")
         if q is None:
             cols = m.group("cols")
@@ -880,72 +893,15 @@ class PgConnection:
             )
             q = f"SELECT {collist} FROM {m.group('table')}"
         opts = (m.group("opts") or "").lower()
-        as_csv = "csv" in opts
         # HEADER [true] enables; HEADER false/off/0 (valid PG forms)
         # disables — a bare substring check would treat them as enabled
         hm = re.search(r"\bheader\b(?:\s+(true|false|on|off|0|1))?", opts)
         with_header = bool(hm) and (hm.group(1) or "true") not in ("false", "off", "0")
-
-        loop = asyncio.get_running_loop()
-        schema, stream = await loop.run_in_executor(
-            None, lambda: self.engine.stream_batches(q, "pg", self.job_group)
+        await self._drain(
+            lambda: self.engine.stream_batches(q, "pg", self.job_group),
+            _CopyRows(self, "csv" in opts, with_header),
+            self.job_group,
         )
-        ncols = len(schema.fields)
-        self._send(b"H", struct.pack(">bh", 0, ncols) + b"\x00\x00" * ncols)
-        await self.writer.drain()
-
-        def _render_text_row(row: tuple) -> str:
-            # PG COPY text format: \N for NULL; escape \, tab, LF, CR
-            out = []
-            for v in row:
-                s = render_pg_text(v)
-                if s is None:
-                    out.append("\\N")
-                else:
-                    out.append(
-                        s.replace("\\", "\\\\")
-                        .replace("\t", "\\t")
-                        .replace("\n", "\\n")
-                        .replace("\r", "\\r")
-                    )
-            return "\t".join(out)
-
-        def _csv_chunk(rows: list[tuple], header: list[str] | None) -> bytes:
-            buf = io.StringIO()
-            w = csv.writer(buf, lineterminator="\n")
-            if header is not None:
-                w.writerow(header)
-            for row in rows:
-                cells = [render_pg_text(v) for v in row]
-                w.writerow(["" if c is None else c for c in cells])
-            return buf.getvalue().encode()
-
-        n = 0
-        first = True
-        try:
-            while True:
-                batch = await loop.run_in_executor(None, stream.next_batch)
-                if batch is None:
-                    break
-                if as_csv:
-                    hdr = [f.name for f in schema.fields] if (with_header and first) else None
-                    self._send(b"d", _csv_chunk(batch, hdr))
-                else:
-                    chunk = "".join(_render_text_row(r) + "\n" for r in batch)
-                    self._send(b"d", chunk.encode())
-                first = False
-                n += len(batch)
-                await self.writer.drain()
-        except (ConnectionResetError, BrokenPipeError, asyncio.CancelledError):
-            stream.close()
-            raise
-        finally:
-            stream.close()
-        if as_csv and with_header and first:
-            # zero-row result still emits the header line
-            self._send(b"d", _csv_chunk([], [f.name for f in schema.fields]))
-        self._send(b"c")  # CopyDone
-        self.send_command_complete(f"COPY {n}")
 
     # -------------------------------------------------- extended protocol
 
@@ -1015,7 +971,6 @@ class PgConnection:
     async def _describe_msg(self, payload: bytes) -> None:
         kind, rest = payload[:1], payload[1:]
         name, _ = _read_cstr(rest)
-        loop = asyncio.get_running_loop()
         if kind == b"S":
             stmt = self.stmts.get(name.decode())
             if stmt is None:
@@ -1032,64 +987,19 @@ class PgConnection:
                 struct.pack(">h", stmt.num_params)
                 + b"".join(struct.pack(">i", o) for o in oids),
             )
-            probe_src = stmt.query
-            em = _EXECUTE_SQL.match(probe_src)
-            if em:  # Describe of a SQL-level EXECUTE: probe the expansion
-                probe_src = self._expand_execute_sql(em.group(1), em.group(2))
-            probe = rewrites.params_to_null(probe_src)  # pg_conn.go:652-656
-            # session-overlay current_setting BEFORE the engine sees the
-            # probe (review finding: asyncpg's Parse+Describe of a
-            # session-SET custom GUC 42704'd even though Execute worked)
-            probe = self._substitute_session_settings(probe)
-            if self.txn is not None and self.txn.status != "E":
-                probe = self.txn.rewrite(probe)  # read-your-writes
-            # DML RETURNING: schema from a zero-row projection over the
-            # target — never by executing the write
-            rschema = await loop.run_in_executor(
-                None, self.engine.describe_returning, probe
-            )
-            if rschema is not None:
-                self.send_row_description(rschema)
-                return
-            # writes/DDL/txn control without RETURNING: NoData — PG
-            # never executes a statement to describe it, and probing a
-            # Spark DDL through engine.query would EXECUTE it eagerly
-            # (round-13 wire battery find: extended-protocol CREATE ran
-            # at Describe, then again at Execute → "already exists")
-            if (
-                _WRITE_VERB.match(probe)
-                and not probe.lstrip().lower().startswith(("select", "with"))
-            ) or _TXN_CTL.match(probe):
-                self._send(b"n")  # NoData
-                return
-            schema = await loop.run_in_executor(None, lambda: self.engine.query(probe, "pg").schema)
-            self.send_row_description(schema)
+            q = rewrites.params_to_null(stmt.query)  # pg_conn.go:652-656
+            formats = None
         else:
             portal = self.portals.get(name.decode())
             if portal is None:
                 raise ValueError(f'portal "{name.decode()}" does not exist')
             q = rewrites.substitute_params(portal.stmt.query, portal.params)
-            em = _EXECUTE_SQL.match(q)
-            if em:  # Describe of a SQL-level EXECUTE: probe the expansion
-                q = self._expand_execute_sql(em.group(1), em.group(2))
-            q = self._substitute_session_settings(q)
-            if self.txn is not None and self.txn.status != "E":
-                q = self.txn.rewrite(q)  # read-your-writes for Describe
-            rschema = await loop.run_in_executor(
-                None, self.engine.describe_returning, q
-            )
-            if rschema is not None:
-                self.send_row_description(rschema, portal.result_formats)
-                return
-            # same NoData rule as Describe-statement (round-13 find)
-            if (
-                _WRITE_VERB.match(q)
-                and not q.lstrip().lower().startswith(("select", "with"))
-            ) or _TXN_CTL.match(q):
-                self._send(b"n")  # NoData
-                return
-            schema = await loop.run_in_executor(None, lambda: self.engine.query(q, "pg").schema)
-            self.send_row_description(schema, portal.result_formats)
+            formats = portal.result_formats
+        schema = await self._route(q, describe=True)
+        if schema is None:
+            self._send(b"n")  # NoData
+        else:
+            self.send_row_description(schema, formats)
 
     def _substitute_session_settings(self, q: str) -> str:
         """PG's current_setting('name') for names THIS connection SET:
@@ -1262,111 +1172,27 @@ class PgConnection:
         portal = self.portals.get(name.decode())
         if portal is None:
             raise ValueError(f'portal "{name.decode()}" does not exist')
-        q = rewrites.substitute_params(portal.stmt.query, portal.params)
-        m = _TXN_CTL.match(q)
-        if m:
-            # JDBC autocommit=false drives BEGIN/COMMIT through the
-            # extended protocol
-            await self._txn_control(_TXN_TAGS[m.group(1).split()[0].lower()])
-            return
-        if self.txn is not None and self.txn.status == "E":
-            raise PgError(
-                "25P02",
-                "current transaction is aborted, commands ignored until end of transaction block",
-            )
-        # SQL-level PREPARE/EXECUTE arriving through the extended protocol
-        # (JDBC text mode wraps whole scripts in Parse/Execute)
-        pm = _PREPARE_SQL.match(q)
-        if pm:
-            self._prepare_stmt_sql(pm.group(1), pm.group(2), pm.group(3))
-            self.send_command_complete("PREPARE")
-            return
-        pm = _EXECUTE_SQL.match(q)
-        if pm:
-            q = self._expand_execute_sql(pm.group(1), pm.group(2))
-        # session GUC SET/RESET via the extended protocol (asyncpg)
-        tag = await self._intercept_set_reset(q)
-        if tag is not None:
-            self.send_command_complete(tag)
-            return
-        q = self._substitute_session_settings(q)
-        if self.txn is not None:
-            loop = asyncio.get_running_loop()
-            tag = await loop.run_in_executor(None, self.txn.intercept_ddl, q)
-            if tag is not None:
-                self.send_command_complete(tag)
-                return
-            q = await loop.run_in_executor(None, self.txn.prepare, q)
-        if _WRITE_VERB.match(q) and not q.strip().lower().startswith(("select", "with")):
-            loop = asyncio.get_running_loop()
-            # DML RETURNING via extended protocol: DataRows only — the
-            # RowDescription came from Describe (describe_returning)
-            ret = await loop.run_in_executor(
-                None, self.engine.execute_returning, q, "pg"
-            )
-            if ret is not None:
-                await self._stream_returning(ret, send_row_desc=False)
-                return
-            tag = await loop.run_in_executor(None, self.engine.execute, q, "pg")
-            self.send_command_complete(tag)
-            return
-        # Execute sends data rows only — RowDescription came from Describe.
-        # maxRows is honored (PortalSuspended + resumable portal) — the
-        # reference parses it then ignores it (quirk Q5, message.go:485 vs
-        # pg_conn.go:509-531); implemented correctly here because JDBC
-        # setFetchSize drives real clients through this path.
-        await self._execute_portal(portal, q, max_rows)
+        if portal.stream is None:
+            q = rewrites.substitute_params(portal.stmt.query, portal.params)
+            await self._route(q, portal, max_rows)
+        else:  # a suspended portal resumes where it stopped
+            await self._run_portal(portal, max_rows, lambda: (portal.rows.schema, portal.stream))
 
-    async def _execute_portal(self, portal: Portal, q: str, max_rows: int) -> None:
+    async def _run_portal(self, portal: Portal, max_rows: int, open_stream) -> None:
         """Send up to max_rows DataRows (0 = all). If the limit is hit
         before the result set is exhausted, send PortalSuspended and keep
         the batch stream open on the portal; a re-Execute resumes exactly
         where it stopped. Exhaustion sends CommandComplete (row count =
         rows sent by THIS Execute segment, as in PG) and releases the
-        stream."""
-        from collections import deque
-
-        loop = asyncio.get_running_loop()
-        if portal.stream is None:
-            self._portal_seq += 1
-            portal.group = f"{self.job_group}-p{self._portal_seq}"
-            self.active_portal_groups.add(portal.group)
-            schema, stream = await loop.run_in_executor(
-                None, lambda: self.engine.stream_batches(q, "pg", portal.group)
-            )
-            portal.schema = schema  # binary result format needs the dtypes
-            portal.stream = stream
-            portal.buf = deque()
-            portal.done = False
-        n = 0
-        timer = _StatementTimer(self, portal.group)
+        stream and its job group."""
+        portal.rows.n, portal.rows.max_rows = 0, max_rows
         try:
-            while max_rows == 0 or n < max_rows:
-                if not portal.buf:
-                    batch = await loop.run_in_executor(None, portal.stream.next_batch)
-                    if batch is None:
-                        portal.done = True
-                        break
-                    portal.buf.extend(batch)
-                while portal.buf and (max_rows == 0 or n < max_rows):
-                    self.send_data_row(portal.buf.popleft(), portal.result_formats, portal.schema)
-                    n += 1
-                await self.writer.drain()
-        except (ConnectionResetError, BrokenPipeError, asyncio.CancelledError):
-            self._release_portal(portal)
-            raise
+            portal.stream = await self._drain(open_stream, portal.rows, portal.group)
         except BaseException:  # engine error or client gone → release the job
             self._release_portal(portal)
-            if timer.fired:  # enforced statement_timeout (ADVICE r8)
-                raise PgError(
-                    "57014", "canceling statement due to statement timeout"
-                ) from None
             raise
-        finally:
-            timer.disarm()
-        if portal.done and not portal.buf:
+        if portal.stream is None:
             self._release_portal(portal)
-            self.send_command_complete(f"({n} row)")  # pg_conn.go:271 literal tag
         else:
             self._send(b"s")  # PortalSuspended
 
@@ -1380,8 +1206,7 @@ class PgConnection:
             self.active_portal_groups.discard(portal.group)
             portal.group = None
         portal.stream = None
-        portal.buf = None
-        portal.done = False
+        portal.rows = None
 
     def _close_msg(self, payload: bytes) -> None:
         kind, rest = payload[:1], payload[1:]
@@ -1398,6 +1223,115 @@ class PgConnection:
             if gone is not None:
                 self._release_portal(gone)  # suspended stream → cancel job
         self._send(b"3")  # CloseComplete
+
+
+def _text_schema(cols) -> StructType:
+    return StructType([StructField(c, StringType()) for c in cols])
+
+
+class _DataRows:
+    """DataRow encoder. Simple Query (no portal) sends its own
+    RowDescription and text rows; Execute sends rows in the portal's
+    Bind result formats, at most `max_rows` of them (0 = all) — once
+    `full`, the rest of the batch waits in `pending` for the next
+    Execute. `end` sends CommandComplete: `tag`, else the reference's
+    literal "(n row)" (pg_conn.go:271)."""
+
+    def __init__(self, conn: PgConnection, portal: Portal | None = None, tag: str | None = None):
+        self.conn = conn
+        self.portal = portal
+        self.formats = portal.result_formats if portal is not None else None
+        self.tag = tag
+        self.schema = None  # binary result formats need the dtypes
+        self.max_rows = 0
+        self.n = 0
+        self.pending: list[tuple] = []
+
+    @property
+    def full(self) -> bool:
+        return self.max_rows > 0 and self.n >= self.max_rows
+
+    def begin(self, schema: StructType) -> None:
+        self.schema = schema
+        if self.portal is None:
+            self.conn.send_row_description(schema)
+        elif self.pending:  # rows a suspended Execute left over
+            self.send([])
+
+    def send(self, batch: list[tuple]) -> None:
+        rows = self.pending + batch if self.pending else batch
+        k = min(len(rows), self.max_rows - self.n) if self.max_rows else len(rows)
+        send, formats, schema = self.conn.send_data_row, self.formats, self.schema
+        for row in itertools.islice(rows, k):
+            send(row, formats, schema)
+        self.n += k
+        self.pending = rows[k:]
+
+    def end(self) -> None:
+        self.conn.send_command_complete(self.tag or f"({self.n} row)")
+
+
+class _CopyRows:
+    """COPY TO STDOUT encoder: CopyOutResponse, one CopyData per batch,
+    CopyDone, COPY-n tag. PG text format (tab separators, \\N nulls,
+    backslash escapes) or CSV (optional HEADER line), as psql \\copy and
+    JDBC CopyManager expect."""
+
+    full = False
+
+    def __init__(self, conn: PgConnection, as_csv: bool, header: bool):
+        self.conn = conn
+        self.as_csv = as_csv
+        self.with_header = as_csv and header
+        self.header: list[str] | None = None  # CSV header not yet sent
+        self.n = 0
+
+    def begin(self, schema: StructType) -> None:
+        ncols = len(schema.fields)
+        self.conn._send(b"H", struct.pack(">bh", 0, ncols) + b"\x00\x00" * ncols)
+        if self.with_header:
+            self.header = [f.name for f in schema.fields]
+
+    def send(self, batch: list[tuple]) -> None:
+        if self.as_csv:
+            data = self._csv(batch)
+        else:
+            data = "".join(_copy_text_row(r) + "\n" for r in batch).encode()
+        self.conn._send(b"d", data)
+        self.n += len(batch)
+
+    def end(self) -> None:
+        if self.header is not None:  # no batch came: the header still goes out
+            self.conn._send(b"d", self._csv([]))
+        self.conn._send(b"c")  # CopyDone
+        self.conn.send_command_complete(f"COPY {self.n}")
+
+    def _csv(self, rows: list[tuple]) -> bytes:
+        buf = io.StringIO()
+        w = csv.writer(buf, lineterminator="\n")
+        if self.header is not None:
+            w.writerow(self.header)
+            self.header = None
+        for row in rows:
+            w.writerow(["" if c is None else c for c in map(render_pg_text, row)])
+        return buf.getvalue().encode()
+
+
+def _copy_text_row(row: tuple) -> str:
+    # PG COPY text format: \N for NULL; escape \, tab, LF, CR
+    out = []
+    for v in row:
+        s = render_pg_text(v)
+        if s is None:
+            out.append("\\N")
+        else:
+            out.append(
+                s.replace("\\", "\\\\")
+                .replace("\t", "\\t")
+                .replace("\n", "\\n")
+                .replace("\r", "\\r")
+            )
+    return "\t".join(out)
 
 
 class PgServer:
@@ -1430,7 +1364,14 @@ class PgServer:
         await self.start()
         assert self._server is not None
         async with self._server:
-            await self._server.serve_forever()
+            try:
+                await self._server.serve_forever()
+            except asyncio.CancelledError:
+                # close() ends serving by closing the server, which
+                # cancels serve_forever's inner future; only a cancel of
+                # this task itself propagates
+                if asyncio.current_task().cancelling():
+                    raise
 
     def close(self) -> None:
         if self._server is None:

@@ -1176,3 +1176,172 @@ def test_nested_begin_is_pg_warning_noop(pg):
     finally:
         c.terminate()
         engine.execute("DROP TABLE IF EXISTS pg_dblbegin")
+
+
+# ------------------------------------------------ one statement path
+#
+# Simple Query and Parse/Bind/Describe/Execute go through one statement
+# router, so a statement must answer alike on both protocols.
+
+
+def _sqlstate(err: bytes) -> str:
+    fields = {f[:1]: f[1:] for f in err.split(b"\x00") if f}
+    return fields[b"C"].decode()
+
+
+def _read_outcome(c: PgClient):
+    """Messages up to ReadyForQuery → (columns, rows, tag), or
+    ("error", SQLSTATE of the first ErrorResponse)."""
+    cols, rows, tag, state = [], [], None, None
+    while True:
+        t, data = c.recv_message()
+        if t == b"T":
+            cols = c._parse_row_desc(data)
+        elif t == b"D":
+            rows.append(c._parse_data_row(data))
+        elif t == b"C":
+            tag = data.rstrip(b"\x00").decode()
+        elif t == b"E" and state is None:
+            state = _sqlstate(data)
+        elif t == b"Z":
+            return ("error", state) if state else (cols, rows, tag)
+
+
+def _run_simple(c: PgClient, sql: str):
+    c._send(b"Q", sql.encode() + b"\x00")
+    return _read_outcome(c)
+
+
+def _run_extended(c: PgClient, sql: str, describe: str):
+    c.parse("", sql)
+    c.bind("", "", [])
+    if describe == "S":
+        c.describe_stmt("")
+    else:
+        c.describe_portal("")
+    c.execute("")
+    c._send(b"S")
+    return _read_outcome(c)
+
+
+# (statements run in order on one connection, expected outcome per
+# statement: rows, "ok" (any success) or an expected SQLSTATE)
+_PARITY_CASES = {
+    "set_then_show": [
+        ("SET application_name = 'parity_app'", "ok"),
+        ("SHOW application_name", [("parity_app",)]),
+    ],
+    "show_unset_custom_guc": [("SHOW parity.never_set", "42704")],
+    "show_transaction_read_only": [("SHOW transaction_read_only", [("0",)])],
+    # engine errors carry the engine's own SQLSTATE, not SQL-0000
+    "engine_sqlstate": [
+        ("SELECT * FROM parity_no_such_table", "42P01"),
+        ("SELECT 7 / 0", "22012"),
+    ],
+    "discard_all": [
+        ("SET application_name = 'gone'", "ok"),
+        ("PREPARE parity_d AS SELECT 1 AS one", "ok"),
+        ("EXECUTE parity_d", [("1",)]),
+        ("DISCARD ALL", "ok"),
+        ("SHOW application_name", [("",)]),
+        ("EXECUTE parity_d", "26000"),
+    ],
+    "deallocate": [
+        ("PREPARE parity_a AS SELECT 1 AS a", "ok"),
+        ("PREPARE parity_b AS SELECT 2 AS b", "ok"),
+        ("DEALLOCATE parity_a", "ok"),
+        ("EXECUTE parity_a", "26000"),
+        ("EXECUTE parity_b", [("2",)]),
+        ("DEALLOCATE ALL", "ok"),
+        ("EXECUTE parity_b", "26000"),
+    ],
+}
+
+
+@pytest.mark.parametrize("describe", ["S", "P"])
+@pytest.mark.parametrize("case", sorted(_PARITY_CASES))
+def test_protocol_parity(pg, case, describe):
+    """Each statement gets the same RowDescription, DataRows and
+    CommandComplete — or the same SQLSTATE — over simple Query and over
+    Parse/Bind/Describe/Execute."""
+    addr, _ = pg
+    simple, extended = PgClient(*addr), PgClient(*addr)
+    try:
+        for sql, want in _PARITY_CASES[case]:
+            got = _run_simple(simple, sql)
+            assert _run_extended(extended, sql, describe) == got, sql
+            if want == "ok":
+                assert got[0] != "error", (sql, got)
+            elif isinstance(want, str):
+                assert got == ("error", want), sql
+            else:
+                assert got[1] == want, (sql, got)
+    finally:
+        simple.terminate()
+        extended.terminate()
+
+
+def test_aborted_block_gets_one_error_per_query(pg):
+    """In a failed transaction block, a multi-statement Query stops at
+    the first 25P02, as every other error stops it."""
+    addr, _ = pg
+    c = PgClient(*addr)
+    try:
+        c.simple_query("BEGIN")
+        assert _run_simple(c, "SELECT * FROM parity_missing_tbl")[0] == "error"
+        c._send(b"Q", b"SELECT 1; SELECT 2; SELECT 3\x00")
+        errors = []
+        while True:
+            t, data = c.recv_message()
+            if t == b"E":
+                errors.append(_sqlstate(data))
+            elif t == b"Z":
+                break
+        assert errors == ["25P02"]
+        _, _, tag = c.simple_query("ROLLBACK")
+        assert tag == "ROLLBACK"
+    finally:
+        c.terminate()
+
+
+def test_copy_to_stdout_honors_statement_timeout(pg):
+    """COPY (query) TO STDOUT runs the query through the same timed
+    drain as the SELECT: both are cancelled with 57014."""
+    addr, _ = pg
+    c = PgClient(*addr)
+    q = "SELECT sum(a.range * b.range) AS s FROM range(30000) a CROSS JOIN range(30000) b"
+    try:
+        c.simple_query("SET statement_timeout = '300ms'")
+        assert _run_simple(c, q) == ("error", "57014")
+        assert _run_simple(c, f"COPY ({q}) TO STDOUT") == ("error", "57014")
+        c.simple_query("SET statement_timeout = 0")
+        _, rows, _ = c.simple_query("SELECT 9 AS x")
+        assert rows == [("9",)]
+    finally:
+        c.terminate()
+
+
+def test_close_ends_server_thread_quietly(pg, monkeypatch):
+    """PgServer.close() stops run_threaded's loop without an exception
+    escaping its thread."""
+    import threading
+
+    _, engine = pg
+    raised = []
+    monkeypatch.setattr(threading, "excepthook", raised.append)
+    before = set(threading.enumerate())
+    port = _free_port()
+    server, loop = run_threaded(engine, port=port)
+    (thread,) = [t for t in set(threading.enumerate()) - before if t.name.endswith("(_run)")]
+    deadline = time.time() + 10
+    while True:  # serving once a client gets through startup
+        try:
+            PgClient("127.0.0.1", port).terminate()
+            break
+        except OSError:
+            assert time.time() < deadline
+            time.sleep(0.05)
+    server.close()
+    thread.join(timeout=10)
+    assert not thread.is_alive()
+    assert raised == []

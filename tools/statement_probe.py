@@ -816,7 +816,7 @@ class MiniSession:
     """The wire server's per-connection statement routing, minus the
     protocol: BEGIN opens a TxnOverlay, in-txn statements go through
     intercept_ddl/prepare, errors abort the block (status E), COMMIT of
-    a failed block rolls back — wire_server.py:564,722."""
+    a failed block rolls back — wire_server.py _route, _txn_control."""
 
     _next_id = 9000
 
@@ -915,7 +915,7 @@ def run_wire_copy_probe(eng, host: str, port: int) -> list[str]:
     """COPY FROM STDIN end-to-end over the socket (CopyInResponse /
     CopyData / CopyDone), compared against DuckDB loading the same CSV
     bytes from a temp file — the one write path the direct battery
-    cannot reach (wire_server.py:811)."""
+    cannot reach (wire_server.py _copy_in)."""
     import tempfile
 
     problems: list[str] = []
