@@ -388,32 +388,4 @@ def run_copy_file(engine, q: str) -> str | None:
             csv_schema
         ).csv(path)
     src = engine._align_to_schema(src, full, names)
-    staged = src.localCheckpoint(eager=True)
-    try:
-        from duck_server_spark.engine import constraints as cst
-        from duck_server_spark.engine.transactions import gated_append
-
-        n = staged.count()
-        found = engine.constraints.get(table)
-        # fingerprint-gated validate+append (ADVICE r7): key races, not
-        # just overwrite races, force a re-validation under the mutex
-        gated_append(
-            spark,
-            table,
-            staged,
-            validate=(
-                (
-                    lambda df: cst.validate_append(
-                        spark, table, df, found, engine.constraints
-                    )
-                )
-                if found
-                else None
-            ),
-        )
-        return f"COPY {n}"
-    finally:
-        try:
-            staged.rdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — cleanup best-effort
-            pass
+    return f"COPY {engine._staged_append(table, src)}"

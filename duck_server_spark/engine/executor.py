@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from duck_server_spark.engine import constraints as cst
+from duck_server_spark.engine.session import release_staged, stage_frame
 from duck_server_spark.plans import rewrites
 
 _CREATE_TABLE_VERB = re.compile(r"^\s*create\s+table\b", re.IGNORECASE)
@@ -3670,7 +3671,9 @@ class Engine:
         df: DataFrame | None = None,
     ) -> tuple:
         """→ (schema, batch stream) for async servers. `df` streams an
-        already-built result (DML RETURNING); `q` then only names the job.
+        already-built result (DML RETURNING); `q` then only names the job,
+        and the stream owns the staged frame `df` reads: it is released
+        when the producer ends (EOF, error or cancel).
 
         ALL Spark actions run on ONE dedicated producer thread that sets
         the job group before iterating — so cancel(job_group) reliably
@@ -3680,9 +3683,10 @@ class Engine:
         thread-local job group would be lost — ADVICE r1). A bounded
         queue gives backpressure: the producer stalls after 4 batches if
         the socket is slow, so server memory stays O(batch)."""
+        owned = df is not None
         if df is None:
             df = self.query(q, dialect)
-        return df.schema, _BatchStream(self.spark, df, q, job_group, batch_size)
+        return df.schema, _BatchStream(self.spark, df, q, job_group, batch_size, owned)
 
     def _analyze(self, table: str | None) -> None:
         """ANALYZE [table]: COMPUTE STATISTICS on the named managed table
@@ -4362,7 +4366,7 @@ class Engine:
         leaked = [c for c in df.columns if c.startswith("__asof_end_")]
         if not leaked:
             return
-        clean = df.drop(*leaked).localCheckpoint(eager=True)
+        clean = stage_frame(df.drop(*leaked))
         try:
             # under the commit mutex: the recreate must not interleave
             # with a concurrent publish; the drop-and-recreate reader
@@ -4375,10 +4379,7 @@ class Engine:
             with _COMMIT_MUTEX:
                 clean.write.mode("overwrite").saveAsTable(table)
         finally:
-            try:
-                clean.rdd.unpersist(False)
-            except Exception:  # noqa: BLE001 — cleanup best-effort
-                pass
+            release_staged(self.spark, clean)
 
     def _exec_asof_guarded(self, prepared: str) -> str | None:
         """INSERT…SELECT/WITH whose rewritten text carries ASOF shim
@@ -4487,15 +4488,16 @@ class Engine:
         assign base + inc*(row_number-1). The single-partition window is
         the honest cost of dense sequence ids — DuckDB serializes the
         same assignment through its counter; at scale prefer
-        monotonically_increasing_id (engine/sequences.py scale note)."""
+        monotonically_increasing_id (engine/sequences.py scale note).
+        → (src, names, staged frames the filled src reads)."""
         missing = (
             [c for c in seqdefs if c not in names] if names is not None else []
         )
         if not missing:
-            return src, names
+            return src, names, ()
         from pyspark.sql.window import Window
 
-        src = src.localCheckpoint(eager=True)
+        src = staged = stage_frame(src)
         n = src.count()
         for col in missing:
             seq = seqdefs[col]
@@ -4510,7 +4512,7 @@ class Engine:
                     F.lit(base) + F.lit(inc) * (F.row_number().over(w) - F.lit(1)),
                 )
             names = [*names, col]
-        return src, names
+        return src, names, (staged,)
 
     def _validated_insert(
         self,
@@ -4519,10 +4521,9 @@ class Engine:
         source: str,
         returning: bool = False,
     ):
-        """INSERT into a constrained table: materialize the source once
-        (eager localCheckpoint — the validation jobs and the append must
-        see identical rows even for non-deterministic SELECT sources),
-        key-validate, then append. Nothing touches the table on violation."""
+        """INSERT into a constrained table: expand DEFAULTs, fill omitted
+        sequence columns and align the source to the target, then append
+        through _staged_append."""
         spark = self.spark
         names = (
             [c.strip().strip('`"') for c in cols_csv.split(",")] if cols_csv else None
@@ -4546,57 +4547,49 @@ class Engine:
         src = self._strip_asof_helpers(
             self._gated_sql(self._prepare_sql(source, "pg"))
         )
-        src, names = self._fill_seq_columns(src, names, seqdefs)
+        src, names, inputs = self._fill_seq_columns(src, names, seqdefs)
         src = self._align_to_schema(src, spark.table(table).schema, names)
-        staged = src.localCheckpoint(eager=True)
+        return self._staged_append(table, src, returning, inputs)
+
+    def _staged_append(self, table: str, src: DataFrame, returning=False, inputs=()):
+        """The one validated-append core (INSERT into a constrained
+        table, COPY FROM a file): stage the aligned source once — the
+        validation jobs and the append must see identical rows even for
+        non-deterministic sources — count it, then validate and append
+        under the fingerprint gate (ADVICE r7: key races force a
+        re-validation). Nothing touches the table on violation.
+        `inputs` are staged frames `src` reads, released once it is
+        staged. → the row count, or for RETURNING (count, staged): the
+        inserted post-image, which the caller's result stream releases."""
+        from duck_server_spark.engine.transactions import gated_append
+
+        try:
+            staged = stage_frame(src)
+        finally:
+            release_staged(self.spark, *inputs)
         try:
             n = staged.count()
-            # fingerprint-gated validate+append (ADVICE r7): the mutex
-            # alone prevents overwrite races but not key races — a
-            # concurrent same-key insert between validation and append
-            # must force a re-validation, not slip a duplicate in
-            from duck_server_spark.engine.transactions import gated_append
+            gated_append(self.spark, table, staged, validate=self._append_validator(table))
+        except BaseException:
+            release_staged(self.spark, staged)
+            raise
+        if returning:
+            return n, staged
+        release_staged(self.spark, staged)
+        return n
 
-            found = self.constraints.get(table)
-            gated_append(
-                spark,
-                table,
-                staged,
-                validate=(
-                    (
-                        lambda df: cst.validate_append(
-                            spark, table, df, found, self.constraints
-                        )
-                    )
-                    if found
-                    else None
-                ),
-            )
-            # RETURNING: the staged rows ARE the inserted post-image
-            # (aligned, defaults filled, casts applied) — keep the
-            # checkpoint alive for the caller's projection
-            return (n, staged) if returning else n
-        finally:
-            import sys as _sys
-
-            # keep the checkpoint only for a SUCCESSFUL returning insert
-            if not returning or _sys.exc_info()[0] is not None:
-                try:
-                    staged.rdd.unpersist(False)  # release checkpoint blocks
-                except Exception:  # noqa: BLE001 — cleanup best-effort
-                    pass
+    def _append_validator(self, table: str):
+        """Constraint validation of rows about to be appended to `table`,
+        or None when it declares no constraints."""
+        found = self.constraints.get(table)
+        if not found:
+            return None
+        return lambda df: cst.validate_append(self.spark, table, df, found, self.constraints)
 
     def appender(self, table: str, cols: list[str] | None, **kw):
         """BatchAppender wired with this engine's constraint validation
         (used by the PG COPY and CH INSERT…FORMAT ingest paths)."""
         from duck_server_spark.sources.ingest import BatchAppender
-
-        found = self.constraints.get(table)
-        validator = (
-            (lambda df: cst.validate_append(self.spark, table, df, found, self.constraints))
-            if found
-            else None
-        )
 
         def _mk_fill(seq_name: str):
             def fill(count: int):
@@ -4608,7 +4601,7 @@ class Engine:
 
         seq_fill = {
             c["cols"][0]: _mk_fill(c["seq"])
-            for c in found
+            for c in self.constraints.get(table)
             if c["kind"] == "seq_default"
         }
         return BatchAppender(
@@ -4616,7 +4609,7 @@ class Engine:
             table,
             self.spark.table(table).schema,
             cols,
-            validator=validator,
+            validator=self._append_validator(table),
             seq_fill=seq_fill,
             **kw,
         )
@@ -4795,9 +4788,13 @@ class Engine:
                 if returning:
                     # DELETE RETURNING yields the deleted (pre-image)
                     # rows: materialize before the truncate removes them
-                    captured = self.spark.table(table).localCheckpoint(eager=True)
-                    n = captured.count()
-                    self.spark.sql(f"TRUNCATE TABLE {table}")
+                    captured = stage_frame(self.spark.table(table))
+                    try:
+                        n = captured.count()
+                        self.spark.sql(f"TRUNCATE TABLE {table}")
+                    except BaseException:
+                        release_staged(self.spark, captured)
+                        raise
                     return n, captured
                 n = self.spark.table(table).count()
                 self.spark.sql(f"TRUNCATE TABLE {table}")
@@ -4949,44 +4946,48 @@ class Engine:
                 # result) → the affected-row set, materialized by an
                 # eager checkpoint BEFORE the publish drops the staging
                 # files (and before a DELETE's publish removes the very
-                # base rows being returned). On a fingerprint-mismatch
-                # retry the stale capture is discarded with the staging.
-                captured = capture(
-                    fresh, self.spark.table(staging)
-                ).localCheckpoint(eager=True)
-            with _COMMIT_MUTEX:
-                if _table_fingerprint(self.spark, table) == fp:
-                    from duck_server_spark.engine.transactions import (
-                        publish_pointer_swap,
-                    )
+                # base rows being returned). The caller's result stream
+                # releases it; a failed publish or a fingerprint-mismatch
+                # retry releases it here.
+                captured = stage_frame(capture(fresh, self.spark.table(staging)))
+            try:
+                with _COMMIT_MUTEX:
+                    if _table_fingerprint(self.spark, table) == fp:
+                        from duck_server_spark.engine.transactions import (
+                            publish_pointer_swap,
+                        )
 
-                    if publish_cols or publish_where:
-                        # projected/filtered publish (upsert marker
-                        # columns, DO NOTHING rows): materialize the
-                        # published shape into a second staging first so
-                        # the pointer swap stays a pure rename
-                        proj = (
-                            ", ".join(f"`{c}`" for c in publish_cols)
-                            if publish_cols
-                            else "*"
-                        )
-                        cond = f" WHERE {publish_where}" if publish_where else ""
-                        pub = f"{staging}_pub"
-                        self.spark.sql(f"DROP TABLE IF EXISTS {pub}")
-                        self.spark.sql(
-                            f"CREATE TABLE {pub} AS SELECT {proj} FROM {staging}{cond}"
-                        )
-                        self.spark.sql(f"DROP TABLE {staging}")
-                        staging_final = pub
-                    else:
-                        staging_final = staging
-                    # version-directory publish (round 9): pointer swap —
-                    # the staged files become a fresh version dir and the
-                    # catalog entry re-points; readers that listed the
-                    # old files keep them until the grace sweep, so an
-                    # in-flight client scan survives this publish.
-                    publish_pointer_swap(self.spark, table, staging_final)
-                    return (n, captured) if capture is not None else n
+                        if publish_cols or publish_where:
+                            # projected/filtered publish (upsert marker
+                            # columns, DO NOTHING rows): materialize the
+                            # published shape into a second staging first so
+                            # the pointer swap stays a pure rename
+                            proj = (
+                                ", ".join(f"`{c}`" for c in publish_cols)
+                                if publish_cols
+                                else "*"
+                            )
+                            cond = f" WHERE {publish_where}" if publish_where else ""
+                            pub = f"{staging}_pub"
+                            self.spark.sql(f"DROP TABLE IF EXISTS {pub}")
+                            self.spark.sql(
+                                f"CREATE TABLE {pub} AS SELECT {proj} FROM {staging}{cond}"
+                            )
+                            self.spark.sql(f"DROP TABLE {staging}")
+                            staging_final = pub
+                        else:
+                            staging_final = staging
+                        # version-directory publish (round 9): pointer swap —
+                        # the staged files become a fresh version dir and the
+                        # catalog entry re-points; readers that listed the
+                        # old files keep them until the grace sweep, so an
+                        # in-flight client scan survives this publish.
+                        publish_pointer_swap(self.spark, table, staging_final)
+                        kept, captured = captured, None  # the caller's stream releases it
+                        return (n, kept) if capture is not None else n
+            finally:
+                if captured is not None:
+                    release_staged(self.spark, captured)
             # fingerprint mismatch: a concurrent publish/append landed.
             # refreshTable before retrying (r7 review) — the re-staged
             # rewrite must list the FRESH files, not a cached listing,
@@ -5009,17 +5010,21 @@ class Engine:
 
 class _BatchStream:
     """One dedicated producer thread pulls toLocalIterator and feeds a
-    bounded queue; consumers call next_batch() from any thread."""
+    bounded queue; consumers call next_batch() from any thread. An
+    `owned` result's staged frame is released when the producer ends."""
 
     _QUEUE_DEPTH = 4
 
-    def __init__(self, spark, df, desc: str, job_group: str | None, batch_size: int):
+    def __init__(
+        self, spark, df, desc: str, job_group: str | None, batch_size: int, owned: bool = False
+    ):
         import queue
 
         self._spark = spark
         self._job_group = job_group
         self._queue: "queue.Queue" = queue.Queue(maxsize=self._QUEUE_DEPTH)
         self._closed = False
+        self._owned = owned
         self._thread = threading.Thread(
             target=self._produce, args=(df, desc, batch_size), daemon=True
         )
@@ -5042,6 +5047,7 @@ class _BatchStream:
         sc = self._spark.sparkContext
         if self._job_group:
             sc.setJobGroup(self._job_group, desc[:100], interruptOnCancel=True)
+        end = None  # EOF
         try:
             buf: list[tuple] = []
             for row in df.toLocalIterator(prefetchPartitions=True):
@@ -5051,12 +5057,16 @@ class _BatchStream:
                         return
                     buf = []
             self._put(buf)
-            self._put(None)  # EOF
         except BaseException as e:  # noqa: BLE001 — relayed to the consumer
-            self._put(e)
+            end = e
         finally:
             if self._job_group:
                 sc.setLocalProperty("spark.jobGroup.id", None)
+            if self._owned:
+                release_staged(self._spark, df)
+        # the end marker goes out only after the release, so the
+        # statement's reply never races it
+        self._put(end)
 
     def next_batch(self, timeout: float | None = None) -> list[tuple] | None:
         """Blocking: → batch of row tuples, or None at EOF. Re-raises

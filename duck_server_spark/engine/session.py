@@ -103,6 +103,48 @@ def session_store(spark: SparkSession) -> dict:
     return store
 
 
+# Staged frames: the one way the engine and the operators materialize an
+# intermediate (an eager local checkpoint) and free it again. A staged
+# frame's logical plan is a LogicalRDD whose rdd is the persisted one, so
+# the id to release is read from the frame itself — no lock, no diff of
+# the session-wide persistent set. (Unpersisting `DataFrame.rdd` frees
+# nothing: `.rdd` builds a fresh, never-persisted conversion RDD.)
+
+
+def stage_frame(df: DataFrame) -> DataFrame:
+    """Materialize `df` once, so every later job over the result (a
+    count, validation scans, the append, self-join sides) reads the same
+    stored rows. Free it with release_staged when its owner is done."""
+    return df.localCheckpoint(eager=True)
+
+
+def staged_rdd_ids(df: DataFrame) -> list[int]:
+    """The checkpoint RDD ids `df` reads: one per LogicalRDD leaf of its
+    logical plan — a staged frame's own, or, for a projection of one
+    (a RETURNING result), the staged frame's under it."""
+    ids = []
+    leaves = df._jdf.queryExecution().logical().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            ids.append(int(leaf.rdd().id()))
+    return ids
+
+
+def release_staged(spark: SparkSession, *staged: "DataFrame | int") -> None:
+    """Free the stored blocks of staged frames (or bare checkpoint RDD
+    ids) now, not whenever GC gets to them. Ids already freed are
+    skipped; release never raises, so it cannot fail a statement."""
+    try:
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
+        for s in staged:
+            for rid in [s] if isinstance(s, int) else staged_rdd_ids(s):
+                if persistent.containsKey(rid):
+                    persistent.get(rid).unpersist(False)
+    except Exception:  # noqa: BLE001 — a stopped session frees everything
+        pass
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Memoized per (session, dir, table): repeated builders reuse the
     analyzed relation instead of re-listing files and re-reading footers

@@ -64,6 +64,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from duck_server_spark.engine.errors import PgError
+from duck_server_spark.engine.session import release_staged, stage_frame
 from duck_server_spark.plans import rewrites
 from duck_server_spark.plans.rewrites import _mask_literals, _sub_outside_literals
 
@@ -256,7 +257,7 @@ def run_upsert(engine, up: UpsertStmt) -> int:
         spark.sql(engine._prepare_sql(up.source_sql, "pg"))
     )
     src = engine._align_to_schema(src, schema, up.cols)
-    staged_src = src.localCheckpoint(eager=True)
+    staged_src = stage_frame(src)
     try:
         # duplicate conflict keys within one command: error BEFORE any
         # write, whether the dups are fresh or collide with one existing
@@ -278,10 +279,7 @@ def run_upsert(engine, up: UpsertStmt) -> int:
             return _do_nothing(engine, up, staged_src, targets, all_cst)
         return _do_update(engine, up, staged_src, targets[0], all_cst, schema, base)
     finally:
-        try:
-            staged_src.rdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — cleanup best-effort
-            pass
+        release_staged(spark, staged_src)
 
 
 def _do_nothing(engine, up, staged_src: DataFrame, targets, all_cst) -> int:
@@ -317,7 +315,7 @@ def _do_nothing(engine, up, staged_src: DataFrame, targets, all_cst) -> int:
         new_rows = new_rows.select(
             *[f.name for f in spark.table(up.table).schema.fields]
         )
-        staged = new_rows.localCheckpoint(eager=True)
+        staged = stage_frame(new_rows)
         try:
             cst.validate_append(
                 spark, up.table, staged, all_cst, engine.constraints
@@ -328,10 +326,7 @@ def _do_nothing(engine, up, staged_src: DataFrame, targets, all_cst) -> int:
                     staged.write.mode("append").saveAsTable(up.table)
                     return n
         finally:
-            try:
-                staged.rdd.unpersist(False)
-            except Exception:  # noqa: BLE001 — cleanup best-effort
-                pass
+            release_staged(spark, staged)
     raise PgError(
         "40001",
         f'could not serialize access: table "{up.table}" was modified by '

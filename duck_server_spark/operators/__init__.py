@@ -121,25 +121,25 @@ _PRIORITY = [
 # guide §1.2 per-task/driver work, same contract as load_table /
 # register_views' memos and the engine's bind-time probe cache).
 _STATEFUL_BUILDERS = {
-    # tracked_local_checkpoint at build time
+    # tracked_local_checkpoint at build time (released by the next call)
     "dedup_minhash_vectorized",
     "dedup_bloom_incremental",
     "text_cooccurrence_lift",
     "text_bm25_retrieval",
     "pipeline_corpus_clean",
+    "agg_hll_mergeable_distinct_prod",       # per-slice sketch rollup
+    "agg_theta_audience_overlap_prod",       # per-slice sketch table
+    "graph_triangles",                       # edge set
+    "dedup_source_matrix",                   # pair set
+    "graph_pagerank",                        # edge set
     # round 14 (VERDICT r13 item 1): builders that materialize through
-    # OTHER means — raw localCheckpoint (eager=True runs the job at
-    # build; eager=False pins partitions on first action), persist
-    # loops, or build-time actions. Memoizing any of these would serve
-    # stored partitions on a second same-session invocation.
+    # OTHER means — localCheckpoint(eager=False) pins partitions on
+    # first action, persist loops, or build-time actions. Memoizing any
+    # of these would serve stored partitions on a second same-session
+    # invocation.
     "agg_hll_mergeable_distinct",            # localCheckpoint(eager=False)
-    "agg_hll_mergeable_distinct_prod",       # localCheckpoint(eager=True)
     "agg_theta_audience_overlap",            # localCheckpoint(eager=False)
-    "agg_theta_audience_overlap_prod",       # localCheckpoint(eager=True)
     "dedup_connected_components",            # persist/checkpoint loop + counts
-    "graph_triangles",                       # edge localCheckpoint(eager=True)
-    "dedup_source_matrix",                   # pair localCheckpoint(eager=True)
-    "graph_pagerank",                        # edge localCheckpoint(eager=True)
 }
 
 # Builders whose build-time materialization is ITSELF memoized per

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duck_server_spark.engine.session import load_table
+from duck_server_spark.engine.session import load_table, register_views
+from duck_server_spark.operators import common
 from duck_server_spark.operators.common import sql_op
 
 
@@ -791,6 +792,11 @@ def agg_hll_mergeable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# checkpoint RDD ids of the previous _prod call, released by the next one
+_hll_prod_cached: list = []
+_theta_prod_cached: list = []
+
+
 def agg_hll_mergeable_distinct_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION PATH (round-7 punch item 6): the plan a 100 TB user
     actually runs — sketch per slice (ONE raw scan, materialized as the
@@ -800,13 +806,13 @@ def agg_hll_mergeable_distinct_prod(spark: SparkSession, sf_dir: str) -> DataFra
     contract lives in the registered `agg_hll_mergeable_distinct` gate
     row and in tests. tools/explain_audit.py FORBIDS any parquet scan in
     this query's plan — machine-checking "never a raw-id rescan"."""
-    from duck_server_spark.engine.session import register_views
-
     register_views(spark, sf_dir)
-    sketches = spark.sql(
+    common.release_checkpoints(spark, _hll_prod_cached)
+    rollup = spark.sql(
         "SELECT event_type, hll_sketch_agg(user_id) AS sk "
         "FROM events GROUP BY event_type"
-    ).localCheckpoint(eager=True)  # the persisted per-slice rollup
+    )  # the persisted per-slice rollup
+    sketches = common.tracked_local_checkpoint(spark, rollup, _hll_prod_cached)
     per_slice = sketches.selectExpr(
         "event_type", "CAST(hll_sketch_estimate(sk) AS BIGINT) AS est_users"
     )
@@ -824,13 +830,13 @@ def agg_theta_audience_overlap_prod(spark: SparkSession, sf_dir: str) -> DataFra
     never user ids. Rows-only; accuracy is gated by the registered
     `agg_theta_audience_overlap` bounded-error row. explain_audit
     FORBIDS parquet scans in this plan (no raw-id rescan)."""
-    from duck_server_spark.engine.session import register_views
-
     register_views(spark, sf_dir)
-    sk = spark.sql(
+    common.release_checkpoints(spark, _theta_prod_cached)
+    rollup = spark.sql(
         "SELECT event_type, theta_sketch_agg(user_id) AS sk "
         "FROM events GROUP BY event_type"
-    ).localCheckpoint(eager=True)
+    )
+    sk = common.tracked_local_checkpoint(spark, rollup, _theta_prod_cached)
     sk.createOrReplaceTempView("theta_slice_sk_prod")
     pairs = spark.sql(
         "SELECT a.event_type AS type_a, b.event_type AS type_b, "

@@ -10,13 +10,17 @@ expression of the operator.
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duck_server_spark.engine.session import register_views
+from duck_server_spark.engine.session import (
+    register_views,
+    release_staged,
+    stage_frame,
+    staged_rdd_ids,
+)
 
 
 def sql_op(sql: str) -> Callable[[SparkSession, str], DataFrame]:
@@ -46,59 +50,36 @@ def dec2(col) -> F.Column:
 DEC = "DECIMAL(18,2)"
 
 
-_CKPT_LOCK = threading.Lock()
-
-
 def tracked_local_checkpoint(spark: SparkSession, df: DataFrame, registry: list) -> DataFrame:
-    """Eager localCheckpoint whose materialized RDD ids are recorded in
-    `registry` so `release_checkpoints` can free their block-manager
-    storage DETERMINISTICALLY. Dropping the Python references alone
-    leaves cleanup to GC + the ContextCleaner — repeated invocations
-    (bench loops, sweeps) would accumulate generations of stored
-    partitions until a collection happens to run.
-
-    The before/after diff of getPersistentRDDs is serialized under a
-    process-wide lock: two operators checkpointing concurrently on the
-    shared session would otherwise each capture the other's RDD ids, and
-    (because localCheckpoint truncates lineage) a cross-release would turn
-    a recompute into an unrecoverable job failure."""
-    with _CKPT_LOCK:
-        before = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-        out = df.localCheckpoint()
-        after = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-        registry.extend(sorted(after - before))
+    """Stage `df` (engine/session.py stage_frame) and record its
+    checkpoint RDD id in `registry`, the builder's own list, so the
+    builder's next call frees the blocks with release_checkpoints instead
+    of leaving generations of stored partitions to GC. The id is read
+    from the staged frame itself, so concurrent builders on the shared
+    session never see, or release, each other's checkpoints."""
+    out = stage_frame(df)
+    registry.extend(staged_rdd_ids(out))
     return out
 
 
 def tracked_local_checkpoint_many(
     spark: SparkSession, dfs: list, registry: list
 ) -> list:
-    """Checkpoint several INDEPENDENT frames with their jobs submitted
-    concurrently (guide §2.6 — actions are only sequential because the
-    driver calls them sequentially; overlapping lets the second job's
-    tasks back-fill executors freed by the first job's tail). Wall time
-    is ~max(job times) instead of their sum. The RDD-id bookkeeping is
-    one before/after diff around the whole batch, still under the
-    process-wide lock, so concurrent operators cannot cross-release."""
+    """tracked_local_checkpoint for several INDEPENDENT frames, their
+    jobs submitted concurrently (guide §2.6 — actions are only
+    sequential because the driver calls them sequentially; overlapping
+    lets the second job's tasks back-fill executors freed by the first
+    job's tail). Wall time is ~max(job times) instead of their sum."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with _CKPT_LOCK:
-        before = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-        with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-            outs = list(pool.map(lambda d: d.localCheckpoint(), dfs))
-        after = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-        registry.extend(sorted(after - before))
+    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
+        outs = list(pool.map(stage_frame, dfs))
+    for out in outs:
+        registry.extend(staged_rdd_ids(out))
     return outs
 
 
 def release_checkpoints(spark: SparkSession, registry: list) -> None:
-    """Unpersist every RDD id recorded by tracked_local_checkpoint and
-    clear the registry. Safe against already-released ids."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in registry:
-        try:
-            if jmap.containsKey(rid):
-                jmap.get(rid).unpersist(False)
-        except Exception:  # noqa: BLE001 — release must never fail a query
-            pass
+    """Free every checkpoint recorded in `registry` and clear it."""
+    release_staged(spark, *registry)
     registry.clear()

@@ -41,6 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from duck_server_spark.engine.session import register_views
+from duck_server_spark.operators import common
 
 # ---------------------------------------------------------------------------
 # Shared staged fragments (Spark dialect + DuckDB dialect twins)
@@ -1051,8 +1052,6 @@ SELECT id1, id2, cosine FROM intra_pairs
 
 
 _exact_q, _exact_o = _sql_pair(DEDUP_EXACT_SPARK, DEDUP_EXACT_DUCK)
-_minhash_q, _minhash_o = _sql_pair(DEDUP_MINHASH_SPARK, DEDUP_MINHASH_DUCK)
-_simhash_q, _simhash_o = _sql_pair(DEDUP_SIMHASH_SPARK, DEDUP_SIMHASH_DUCK)
 _jaccard_q, _jaccard_o = _sql_pair(DEDUP_NGRAM_JACCARD_SPARK, DEDUP_NGRAM_JACCARD_DUCK)
 _contain_q, _contain_o = _sql_pair(DEDUP_NGRAM_CONTAIN_SPARK, DEDUP_NGRAM_CONTAIN_DUCK)
 _emb_q, _emb_o = _sql_pair(DEDUP_EMBEDDING_SPARK, DEDUP_EMBEDDING_DUCK)
@@ -1068,8 +1067,10 @@ QUERIES = {
 
 ORACLE = {
     "dedup_exact": _exact_o,
-    "dedup_minhash_lsh": _minhash_o,
-    "dedup_simhash": _simhash_o,
+    # the Spark spellings (DEDUP_*_SPARK) are the reference the kernels
+    # are pinned against in tests, not registry builders
+    "dedup_minhash_lsh": DEDUP_MINHASH_DUCK,
+    "dedup_simhash": DEDUP_SIMHASH_DUCK,
     "dedup_ngram_jaccard": _jaccard_o,
     "dedup_ngram_containment": _contain_o,
     "dedup_embedding_cosine": _emb_o,
@@ -1389,13 +1390,7 @@ def dedup_minhash_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.createOrReplaceTempView("mhv_corpus")
     # Deterministically release the previous call's checkpointed storage
     # (GC-driven cleanup would let generations pile up across bench runs).
-    from duck_server_spark.operators.common import (
-        release_checkpoints,
-        tracked_local_checkpoint,
-        tracked_local_checkpoint_many,
-    )
-
-    release_checkpoints(spark, _mhv_cached)
+    common.release_checkpoints(spark, _mhv_cached)
     # TWO checkpoints, both slim — neither stores document text.
     # (Round-3 additionally checkpointed a fat (doc_id, text, chash)
     # `base` table; serializing the whole corpus text into the block
@@ -1487,7 +1482,7 @@ SELECT DISTINCT a.doc_id AS id1, a.chash AS h1, b2.doc_id AS id2, b2.chash AS h2
 FROM long a JOIN long b2
   ON a.bnd = b2.bnd AND a.sig = b2.sig AND a.doc_id < b2.doc_id
 """)
-    groups, rep_pairs = tracked_local_checkpoint_many(
+    groups, rep_pairs = common.tracked_local_checkpoint_many(
         spark, [groups_lazy, rep_pairs], _mhv_cached
     )
     groups.createOrReplaceTempView("mhv_groups")
@@ -1499,7 +1494,7 @@ FROM long a JOIN long b2
     # candidates only — bounded by the banding collision count, never
     # the corpus) computes it once. Interleaved 8-pair A/B: 7/8 wins,
     # med 1.533 -> 1.414 s, min 1.386 -> 1.116; output tuple-identical.
-    shing = tracked_local_checkpoint(
+    shing = common.tracked_local_checkpoint(
         spark,
         spark.sql("""
 WITH cand_ids AS (
@@ -1556,6 +1551,9 @@ QUERIES["dedup_minhash_vectorized"] = dedup_minhash_vectorized
 # Triangle enumeration over the near-dup graph
 # ---------------------------------------------------------------------------
 
+_tri_cached: list = []
+
+
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangles in the simhash near-duplicate graph — the graph-shaped
     consumer of a dedup pass (triangle density distinguishes boilerplate
@@ -1574,8 +1572,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected-superlinear. Production graphs additionally order vertices
     by degree before the wedge join so high-degree hubs don't fan out;
     the fixture graph is exact-dup cliques where ordering is uniform."""
-    edges = (
-        QUERIES["dedup_simhash"](spark, sf_dir).select("id1", "id2").localCheckpoint(eager=True)
+    common.release_checkpoints(spark, _tri_cached)
+    edges = common.tracked_local_checkpoint(
+        spark, QUERIES["dedup_simhash"](spark, sf_dir).select("id1", "id2"), _tri_cached
     )
     e1 = edges.selectExpr("id1 AS a", "id2 AS b")
     e2 = edges.selectExpr("id1 AS b", "id2 AS c")
@@ -1600,6 +1599,9 @@ ORACLE["graph_triangles"] = GRAPH_TRIANGLES_ORACLE.format(SIMHASH=ORACLE["dedup_
 # Cross-source duplication matrix — pipeline observability
 # ---------------------------------------------------------------------------
 
+_dsm_cached: list = []
+
+
 def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which sources share (near-)duplicate content: the simhash pair
     set joined back to each side's source, aggregated to a
@@ -1615,12 +1617,12 @@ def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Injected duplicate ids (base + 1,000,000, see _CORPUS) are mapped
     back to their base doc's source before the lookup — an inner join
     on the raw id would silently drop exactly the planted duplicates."""
-    pairs = (
-        QUERIES["dedup_simhash"](spark, sf_dir)
-        .select("id1", "id2", "hamming")
-        .localCheckpoint(eager=True)
+    common.release_checkpoints(spark, _dsm_cached)
+    pairs = common.tracked_local_checkpoint(
+        spark,
+        QUERIES["dedup_simhash"](spark, sf_dir).select("id1", "id2", "hamming"),
+        _dsm_cached,
     )
-    from duck_server_spark.engine.session import register_views
 
     register_views(spark, sf_dir)
     pairs.createOrReplaceTempView("dsm_pairs")
@@ -1803,13 +1805,8 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy view the whole scan→hash→mapInPandas check stage ran twice.
     # Eager localCheckpoint of the slim (doc_id, might) frame runs it
     # once; both references read the stored rows.
-    from duck_server_spark.operators.common import (
-        release_checkpoints,
-        tracked_local_checkpoint,
-    )
-
-    release_checkpoints(spark, _bloom_cached)
-    flags = tracked_local_checkpoint(
+    common.release_checkpoints(spark, _bloom_cached)
+    flags = common.tracked_local_checkpoint(
         spark,
         spark.sql(f"SELECT doc_id, xxhash64(text) AS chash FROM {v_in}")
         .selectExpr("doc_id", f"{_BLOOM_POS_EXPR} AS pos")
@@ -2175,11 +2172,13 @@ FROM s3 JOIN deg d ON d.node = s3.node
 
 
 _PR_SEQ = [0]
+_pr_cached: list = []
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = (
-        QUERIES["dedup_simhash"](spark, sf_dir).select("id1", "id2").localCheckpoint(eager=True)
+    common.release_checkpoints(spark, _pr_cached)
+    edges = common.tracked_local_checkpoint(
+        spark, QUERIES["dedup_simhash"](spark, sf_dir).select("id1", "id2"), _pr_cached
     )
     _PR_SEQ[0] += 1
     v = f"pagerank_edges_{_PR_SEQ[0]}"

@@ -25,7 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duck_server_spark.engine.session import load_table
+from duck_server_spark.engine.session import load_table, register_views
+from duck_server_spark.operators import common
 
 # Tokens: lowercase whitespace split. Both engines: regex split on \s+.
 _TOKS = r"split(trim(text), '\\s+')"
@@ -1217,21 +1218,15 @@ def text_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint waves): interleaved 8-pair A/B, builder+action timed
     exactly as bench.py does — staged med 0.595 / min 0.543 vs inline
     med 0.671 / min 0.583, staged wins 6/8. The staging stays."""
-    from duck_server_spark.engine.session import register_views
-    from duck_server_spark.operators.common import (
-        release_checkpoints,
-        tracked_local_checkpoint,
-    )
-
     register_views(spark, sf_dir)
-    release_checkpoints(spark, _cooc_cached)
-    dterms = tracked_local_checkpoint(
+    common.release_checkpoints(spark, _cooc_cached)
+    dterms = common.tracked_local_checkpoint(
         spark,
         spark.sql(f"SELECT doc_id, explode(array_distinct({_TOKS})) AS term FROM documents"),
         _cooc_cached,
     )
     dterms.createOrReplaceTempView("__cooc_dterms")
-    capped = tracked_local_checkpoint(
+    capped = common.tracked_local_checkpoint(
         spark,
         spark.sql(f"""
 WITH dterms AS (SELECT * FROM __cooc_dterms),
@@ -1611,15 +1606,9 @@ def text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a slim eager localCheckpoint (doc_id, term, tf — no document
     text) and the unchanged tail reads it; identical integer arithmetic,
     oracle hash unchanged (measured 1.31 -> 1.05 s at sf0.1)."""
-    from duck_server_spark.engine.session import register_views
-    from duck_server_spark.operators.common import (
-        release_checkpoints,
-        tracked_local_checkpoint,
-    )
-
     register_views(spark, sf_dir)
-    release_checkpoints(spark, _bm25_cached)
-    tf = tracked_local_checkpoint(
+    common.release_checkpoints(spark, _bm25_cached)
+    tf = common.tracked_local_checkpoint(
         spark,
         spark.sql(
             f"SELECT doc_id, term, count(*) AS tf "

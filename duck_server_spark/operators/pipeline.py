@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from duck_server_spark.engine.session import register_views
+from duck_server_spark.operators import common
 from duck_server_spark.operators.dedup import _CORPUS
 
 # ---------------------------------------------------------------------------
@@ -404,14 +405,9 @@ def corpus_clean_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference). Checkpointing truncates the lineage so downstream
     # physically reads the stored partitions. (On a cluster, checkpoint
     # to reliable storage for fault tolerance.)
-    from duck_server_spark.operators.common import (
-        release_checkpoints,
-        tracked_local_checkpoint,
-    )
-
-    release_checkpoints(spark, _clean_cached)  # deterministic, not GC-driven
+    common.release_checkpoints(spark, _clean_cached)  # deterministic, not GC-driven
     par = spark.sparkContext.defaultParallelism
-    ann = tracked_local_checkpoint(spark, spark.sql(_CLEAN_ANN_SPARK), _clean_cached)
+    ann = common.tracked_local_checkpoint(spark, spark.sql(_CLEAN_ANN_SPARK), _clean_cached)
     ann.createOrReplaceTempView("__clean_ann")
     # round-robin repartition before the Python stage (same rationale as
     # the minhash signature stage: the survivor set otherwise arrives in
@@ -419,7 +415,7 @@ def corpus_clean_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = spark.sql(
         "SELECT doc_id, text FROM __clean_ann WHERE q_pass AND e_keep"
     ).repartition(par)
-    shing = tracked_local_checkpoint(
+    shing = common.tracked_local_checkpoint(
         spark, surv.mapInPandas(_clean_shing_sig_batches, _CLEAN_SIG_SCHEMA), _clean_cached
     )
     shing.createOrReplaceTempView("__clean_shing")
