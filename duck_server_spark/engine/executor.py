@@ -19,8 +19,9 @@ class is our equivalent seam around one shared SparkSession:
 
 Scale notes: one SparkSession serves all connections (Spark actions are
 thread-safe); each query runs in its own job group so per-query cancel
-works under concurrency. Result streaming uses toLocalIterator, which
-pulls one partition at a time — the driver never holds a full result.
+works under concurrency. Results stream through engine/transfer.py,
+which pulls one partition at a time — the driver never holds a full
+result.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from pyspark.sql import functions as F
 
 from duck_server_spark.engine import constraints as cst
 from duck_server_spark.engine.session import release_staged, stage_frame
+from duck_server_spark.engine.transfer import iter_rows
 from duck_server_spark.plans import rewrites
 
 _CREATE_TABLE_VERB = re.compile(r"^\s*create\s+table\b", re.IGNORECASE)
@@ -5009,7 +5011,7 @@ class Engine:
 
 
 class _BatchStream:
-    """One dedicated producer thread pulls toLocalIterator and feeds a
+    """One dedicated producer thread pulls transfer.iter_rows and feeds a
     bounded queue; consumers call next_batch() from any thread. An
     `owned` result's staged frame is released when the producer ends."""
 
@@ -5048,10 +5050,11 @@ class _BatchStream:
         if self._job_group:
             sc.setJobGroup(self._job_group, desc[:100], interruptOnCancel=True)
         end = None  # EOF
+        rows = iter_rows(df)
         try:
             buf: list[tuple] = []
-            for row in df.toLocalIterator(prefetchPartitions=True):
-                buf.append(tuple(row))
+            for row in rows:
+                buf.append(row)
                 if len(buf) >= batch_size:
                     if not self._put(buf):
                         return
@@ -5060,6 +5063,7 @@ class _BatchStream:
         except BaseException as e:  # noqa: BLE001 — relayed to the consumer
             end = e
         finally:
+            rows.close()
             if self._job_group:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             if self._owned:

@@ -11,7 +11,9 @@ Scale notes (100 TB design intent):
   many server connections (each query gets its own job group for cancel).
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
   broadcast-join conversion replace hand-tuned plans at scale.
-- Arrow enabled: result collection to the protocol edge is columnar.
+- Arrow enabled for the pandas paths (toPandas, pandas UDFs). Results
+  reach the protocol edge as pickled row batches, one partition at a
+  time (engine/transfer.py), not as Arrow.
 """
 
 from __future__ import annotations

@@ -15,7 +15,8 @@ Reference parity: /root/reference/ch_server.go —
   SCRAM verifier store, 60 s cache — keyed by USERNAME (the reference
   caches under the literal string "user", quirk Q2; fixed here).
 
-Scale: results stream through the format writer from toLocalIterator —
+Scale: results stream through the format writer from the engine's
+partition reader (engine/transfer.py), one chunk per batch —
 O(partition) server memory; ingest batches rows and appends through one
 DataFrame write per request (the Appender analogue, README.md:32).
 """
@@ -46,6 +47,8 @@ AUTH_CACHE_TTL = 60.0  # ch_server.go:24
 
 class ChRequestHandler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
+    # each response write is one whole chunk: send it at once
+    disable_nagle_algorithm = True
     engine: Engine = None  # type: ignore[assignment]
     auth_cache: dict[str, tuple[str, float]] = {}
     auth_lock = threading.Lock()
@@ -229,8 +232,10 @@ class ChRequestHandler(BaseHTTPRequestHandler):
                     continue
                 if batch is None:
                     break
-                for row in batch:
-                    emit(writer.write_row(row))
+                # one chunk per batch; an empty chunk would end the body
+                data = b"".join(map(writer.write_row, batch))
+                if data:
+                    emit(data)
             if comp is not None:
                 tail = comp.flush()
                 if tail:

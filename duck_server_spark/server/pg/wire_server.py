@@ -38,8 +38,9 @@ Concurrency: asyncio sockets; every Spark action runs in a worker thread
 (run_in_executor) so one slow query never blocks other connections.
 Every result stream (SELECT, COPY TO, DML RETURNING, portal Execute) is
 pulled by one loop, PgConnection._drain, from a _BatchStream whose
-producer thread owns the statement's job group; an encoder per target
-turns each batch into DataRows or CopyData.
+producer thread owns the statement's job group and reads Spark's
+partitions through engine/transfer.py; an encoder per target turns each
+batch into DataRows or CopyData.
 """
 
 from __future__ import annotations

@@ -15,6 +15,8 @@ import struct
 class PgClient:
     def __init__(self, host: str, port: int, user: str = "test", password: str | None = None):
         self.sock = socket.create_connection((host, port), timeout=120)
+        # each protocol message is its own write, as in libpq: send it at once
+        self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self.backend_pid = None
         self.secret_key = None
         self.last_ready_status = None  # ReadyForQuery txn byte: I / T / E

@@ -280,6 +280,39 @@ def test_gzip_select_roundtrip(ch):
     assert len(body.decode().splitlines()) == 100
 
 
+def test_select_sends_one_chunk_per_batch(ch):
+    """A result goes out as one chunked frame per 1000-row batch, not
+    one per row. A zero-row result (the producer still queues its empty
+    last batch) sends only the terminating chunk, so the keep-alive
+    connection serves the next request."""
+    base, _ = ch
+    host, port = base.removeprefix("http://").split(":")
+    s = socket.create_connection((host, int(port)), timeout=120)
+    f = s.makefile("rb")
+
+    def chunks_of(query: str) -> list[bytes]:
+        q = urllib.parse.quote(query)
+        s.sendall(f"GET /?query={q} HTTP/1.1\r\nHost: x\r\n\r\n".encode())
+        assert f.readline().startswith(b"HTTP/1.1 200")
+        while f.readline() != b"\r\n":  # headers
+            pass
+        out = []
+        while size := int(f.readline(), 16):
+            out.append(f.read(size))
+            f.readline()
+        f.readline()
+        return out
+
+    seq = "SELECT number FROM (SELECT explode(sequence(1, 2500)) AS number)"
+    chunks = chunks_of(seq)
+    assert len(chunks) == 3
+    assert b"".join(chunks).split() == [str(i).encode() for i in range(1, 2501)]
+    assert chunks_of(f"{seq} WHERE number < 0") == []
+    assert chunks_of("SELECT 1 AS one") == [b"1\n"]
+    f.close()
+    s.close()
+
+
 def test_insert_json_each_row_nested_roundtrip(ch):
     """Round-6 punch item 4 (reference path: ch_format.go:25-84 feeding
     go-duckdb's Appender, ch_server.go:300-336): arrays/maps/structs in

@@ -1236,9 +1236,8 @@ def test_cross_table_commit_atomic_visibility(pgt):
 
 
 def test_inflight_scan_survives_three_publishes(pgt, spark):
-    """A slow toLocalIterator scan (the exact iterator the wire server's
-    _BatchStream drains) overlaps THREE pointer-swap publishes of the
-    same table: zero FileNotFound/FAILED_READ_FILE, and the reader sees
+    """A slow toLocalIterator scan overlaps THREE pointer-swap publishes
+    of the same table: zero FileNotFound/FAILED_READ_FILE, and the reader sees
     the CONSISTENT ORIGINAL snapshot — every row the pre-publish value,
     full original row count. toLocalIterator runs later partitions'
     jobs lazily, so partitions read AFTER each publish must fetch the
@@ -1267,6 +1266,38 @@ def test_inflight_scan_survives_three_publishes(pgt, spark):
         ).collect()[0][:] == (3.0, 3.0)
     finally:
         engine.execute("DROP TABLE IF EXISTS vp_t")
+
+
+def test_inflight_batch_stream_survives_three_publishes(pgt, spark):
+    """The same overlap through _BatchStream, the stream the wire
+    servers drain (engine.stream_batches): its reader prefetches one
+    partition and its queue holds four batches, so most of the 16
+    partitions are read after the publishes and must still fetch the
+    OLD files — every row the pre-publish value, full row count."""
+    _addr, engine = pgt
+    shutil.rmtree(
+        f"{spark.conf.get('spark.sql.warehouse.dir').removeprefix('file:')}/vp_b",
+        ignore_errors=True,
+    )
+    spark.sql("DROP TABLE IF EXISTS vp_b")
+    n = 120_000
+    spark.range(0, n, 1, 16).selectExpr("id", "CAST(0 AS DOUBLE) AS v").write.saveAsTable("vp_b")
+    try:
+        _schema, stream = engine.stream_batches("SELECT id, v FROM vp_b", batch_size=500)
+        rows = list(stream.next_batch(timeout=60))  # the scan is in flight
+        for k in range(3):
+            assert engine.execute("UPDATE vp_b SET v = v + 1") == f"UPDATE {n}"
+            while len(rows) < 20_000 * (k + 1):
+                rows.extend(stream.next_batch(timeout=60))
+        while (batch := stream.next_batch(timeout=60)) is not None:
+            rows.extend(batch)
+        assert len(rows) == n and len({r[0] for r in rows}) == n
+        assert {r[1] for r in rows} == {0.0}
+        assert engine.query(
+            "SELECT min(v) AS mn, max(v) AS mx FROM vp_b"
+        ).collect()[0][:] == (3.0, 3.0)
+    finally:
+        engine.execute("DROP TABLE IF EXISTS vp_b")
 
 
 def test_inflight_wire_scan_survives_publishes(pgt, spark):
