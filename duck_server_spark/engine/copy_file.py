@@ -182,8 +182,7 @@ def run_export_database(engine, path: str, fmt: str | None) -> str:
     scale a real backup wants the table directories themselves, which is
     exactly what plain Spark writes give, so this statement stays a
     convenience exporter like DuckDB's."""
-    from duck_server_spark.engine.executor import _INTERNAL_TABLE_MARKS
-    from duck_server_spark.engine.executor import _BOOTSTRAP_VIEW_NAMES
+    from duck_server_spark.engine.catalog import is_engine_artifact
 
     fmt = (fmt or "parquet").lower()
     if fmt not in ("parquet", "csv"):
@@ -200,8 +199,7 @@ def run_export_database(engine, path: str, fmt: str | None) -> str:
         t.name
         for t in spark.catalog.listTables()
         if (t.tableType or "").upper() == "MANAGED"
-        and t.name not in _BOOTSTRAP_VIEW_NAMES
-        and not any(mark in t.name for mark in _INTERNAL_TABLE_MARKS)
+        and not is_engine_artifact(t.name)
     ]
     for t in sorted(tables):
         fields = spark.table(t).schema.fields

@@ -37,12 +37,14 @@ import secrets
 import threading
 import time
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duck_server_spark.engine import catalog
 from duck_server_spark.engine import constraints as cst
 from duck_server_spark.engine.session import release_staged, stage_frame
 from duck_server_spark.engine.transfer import iter_rows
+from duck_server_spark.engine.types import duckdb_type_name
 from duck_server_spark.plans import rewrites
 
 _CREATE_TABLE_VERB = re.compile(r"^\s*create\s+table\b", re.IGNORECASE)
@@ -117,57 +119,6 @@ _SHOW_ONE = re.compile(r"^\s*show\s+([A-Za-z_]\w*)\s*;?\s*$", re.IGNORECASE)
 _SHOW_NATIVE_VERBS = frozenset(
     ("databases", "schemas", "views", "functions", "catalogs", "namespaces")
 )
-# engine-internal names SHOW TABLES must not expose: bootstrap compat
-# views (_bootstrap/_refresh_catalog_views) and transient shadow/staging
-# tables (name-marker filter — the honest approximation, since staging
-# names carry no registry)
-_BOOTSTRAP_VIEW_NAMES = frozenset(
-    (
-        "pg_type",
-        "pg_matviews",
-        "constraint_column_usage",
-        "system_databases",
-        "system_tables",
-        "system_columns",
-        "system_functions",
-        "info_schema_tables",
-        "info_schema_columns",
-        "info_schema_schemata",
-        "pg_class",
-        "pg_namespace",
-        "pg_attribute",
-        "table_constraints",
-        "key_column_usage",
-        "pg_settings",
-        "duckdb_tables",
-        "duckdb_views",
-        "duckdb_columns",
-        "duckdb_constraints",
-        "duckdb_schemas",
-        "duckdb_settings",
-        "duckdb_functions",
-        "duckdb_databases",
-        "duckdb_sequences",
-        "duckdb_indexes",
-        "duckdb_keywords",
-        "duckdb_types",
-        "duckdb_extensions",
-    )
-)
-_INTERNAL_TABLE_MARKS = (
-    "__txn_",
-    "__cow_staging_",
-    "__ins_staging_",
-    "__alter_staging_",
-    "__ubn_tail_",
-    # round-10 materialization views: (DESCRIBE …)-in-FROM and nested
-    # percent-LIMIT subqueries (review catch: these polluted SHOW
-    # TABLES / duckdb_tables; they must outlive the statement — the
-    # returned DataFrame is lazy — so hiding, not dropping, is correct)
-    "__duck_meta_",
-    "__duck_sub_",
-    "__duck_file_",
-)
 # UNION [ALL] BY NAME separators + the trailing clause that applies to
 # the whole set op (round 10)
 _UNION_BY_NAME = re.compile(r"\bunion\s+(all\s+)?by\s+name\b", re.IGNORECASE)
@@ -177,87 +128,9 @@ _TRAILING_SETOP_CLAUSE = re.compile(
     r"\b(?:order\s+by|limit|offset)\b", re.IGNORECASE
 )
 _UBN_SEQ = itertools.count(1)
-# duckdb_types() rows for the Spark-representable type surface:
-# (type_name, type_size, logical_type, type_category) — sizes, logical
-# names, and categories pinned value-for-value vs live DuckDB 1.x
-_DUCKDB_TYPE_ROWS = (
-    ("bigint", 8, "BIGINT", "NUMERIC"),
-    ("blob", 16, "BLOB", None),
-    ("boolean", 1, "BOOLEAN", "BOOLEAN"),
-    ("date", 4, "DATE", "DATETIME"),
-    ("decimal", None, "DECIMAL", "NUMERIC"),
-    ("double", 8, "DOUBLE", "NUMERIC"),
-    ("float", 4, "FLOAT", "NUMERIC"),
-    ("integer", 4, "INTEGER", "NUMERIC"),
-    ("interval", 16, "INTERVAL", "DATETIME"),
-    ("list", 16, "LIST", "COMPOSITE"),
-    ("map", 16, "MAP", "COMPOSITE"),
-    ("smallint", 2, "SMALLINT", "NUMERIC"),
-    ("struct", 0, "STRUCT", "COMPOSITE"),
-    ("timestamp", 8, "TIMESTAMP", "DATETIME"),
-    ("tinyint", 1, "TINYINT", "NUMERIC"),
-    ("varchar", 16, "VARCHAR", "STRING"),
-)
-
-# builtins tagged `aggregate` in duckdb_functions() — listFunctions has
-# no kind flag, so the common aggregate surface is pinned by name
-_AGGREGATE_FN_NAMES = frozenset(
-    """
-    any_value approx_count_distinct approx_percentile avg bit_and bit_or
-    bit_xor bool_and bool_or collect_list collect_set corr count
-    count_if count_min_sketch covar_pop covar_samp first first_value
-    grouping grouping_id histogram_numeric hll_sketch_agg kurtosis last
-    last_value listagg max max_by mean median min min_by mode percentile
-    percentile_approx regr_avgx regr_avgy regr_count regr_intercept
-    regr_r2 regr_slope regr_sxx regr_sxy regr_syy skewness some std
-    stddev stddev_pop stddev_samp string_agg sum try_avg try_sum
-    var_pop var_samp variance
-    """.split()
-)
 # Spark-specific DESCRIBE targets stay on the native path
 _DESCRIBE_NATIVE = frozenset(
     ("function", "database", "schema", "extended", "formatted", "history", "detail")
-)
-
-
-def _duckdb_type_name(dt) -> str:
-    """Spark DataType → DuckDB's DESCRIBE type spelling (pinned against
-    live DuckDB in tests/test_compat.py)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.ArrayType):
-        return _duckdb_type_name(dt.elementType) + "[]"
-    if isinstance(dt, T.DecimalType):
-        return f"DECIMAL({dt.precision},{dt.scale})"
-    if isinstance(dt, T.MapType):
-        return (
-            f"MAP({_duckdb_type_name(dt.keyType)}, "
-            f"{_duckdb_type_name(dt.valueType)})"
-        )
-    if isinstance(dt, T.StructType):
-        inner = ", ".join(
-            f"{f.name} {_duckdb_type_name(f.dataType)}" for f in dt.fields
-        )
-        return f"STRUCT({inner})"
-    return {
-        "tinyint": "TINYINT",
-        "smallint": "SMALLINT",
-        "int": "INTEGER",
-        "bigint": "BIGINT",
-        "float": "FLOAT",
-        "double": "DOUBLE",
-        "string": "VARCHAR",
-        "boolean": "BOOLEAN",
-        "date": "DATE",
-        "timestamp": "TIMESTAMP",
-        "timestamp_ntz": "TIMESTAMP",
-        "binary": "BLOB",
-    }.get(dt.simpleString(), dt.simpleString().upper())
-
-# system.* / information_schema.* compat views (A27) → shim temp views
-_CATALOG_REF = re.compile(
-    r"\b(system\.(databases|tables|columns|functions)|information_schema\.(schemata|tables|columns|constraint_column_usage|table_constraints|key_column_usage)|pg_catalog\.(pg_type|pg_class|pg_namespace|pg_attribute|pg_settings)|pg_type|pg_matviews|pg_class|pg_namespace|pg_attribute|pg_settings|duckdb_tables|duckdb_views|duckdb_columns|duckdb_constraints|duckdb_schemas|duckdb_settings|duckdb_functions|duckdb_databases|duckdb_sequences|duckdb_indexes|duckdb_keywords|duckdb_types|duckdb_extensions)\b",
-    re.IGNORECASE,
 )
 
 
@@ -327,6 +200,9 @@ class Engine:
         # bearing statements (dashboards re-issuing the same casts) drop
         # from ~15 ms to sub-ms bind time.
         self._probe_cache: dict = {}
+        # catalog views this engine has created (engine/catalog.py);
+        # the base frames they read are rebuilt per statement
+        self._catalog_views: set = set()
         # PK/UNIQUE registry (the reference gets enforcement from embedded
         # DuckDB's indexes, README.md:21-22; we validate on ingest —
         # engine/constraints.py)
@@ -507,29 +383,11 @@ class Engine:
     # --------------------------------------------------------- bootstrap
 
     def _bootstrap(self) -> None:
-        """A27 compat objects: pg_type/pg_matviews static views + SQL
-        macros (array_positions/timezone/currentDatabase — the reference
-        registers these as DuckDB macros, pg_server.go:40-42)."""
+        """SQL macros (array_positions/timezone/currentDatabase — the
+        reference registers these as DuckDB macros, pg_server.go:40-42)
+        and Python-tier scalars. The compat catalog views are built on
+        first reference (engine/catalog.py)."""
         spark = self.spark
-        pg_type = spark.createDataFrame(
-            [
-                Row(oid=16, typname="bool"), Row(oid=20, typname="int8"),
-                Row(oid=21, typname="int2"), Row(oid=23, typname="int4"),
-                Row(oid=25, typname="text"), Row(oid=700, typname="float4"),
-                Row(oid=701, typname="float8"), Row(oid=1082, typname="date"),
-                Row(oid=1114, typname="timestamp"), Row(oid=1184, typname="timestamptz"),
-                Row(oid=1700, typname="numeric"), Row(oid=114, typname="json"),
-            ]
-        )
-        pg_type.createOrReplaceTempView("pg_type")
-        spark.createDataFrame([], "schemaname string, matviewname string").createOrReplaceTempView("pg_matviews")
-        # JDBC/DataGrip metadata probes query this at connect time — the
-        # reference creates it empty at bootstrap (pg_server.go:46-47)
-        spark.createDataFrame(
-            [],
-            "constraint_catalog string, constraint_schema string, constraint_name string, "
-            "table_catalog string, table_schema string, table_name string, column_name string",
-        ).createOrReplaceTempView("constraint_column_usage")
         for name, body in (
             ("array_positions", "(a ARRAY<STRING>, b STRING) RETURNS INT RETURN 0"),
             # registered under the REFERENCE's spelling (pg_server.go:41) —
@@ -646,654 +504,6 @@ class Engine:
         except Exception:
             pass  # best-effort: missing pandas/arrow leaves these loud
 
-    def _refresh_catalog_views(self) -> None:
-        """system.*/information_schema.* snapshots from spark.catalog
-        (rebuilt on reference: duckdbInit views over duckdb's catalog,
-        pg_server.go:44-68)."""
-        spark = self.spark
-        import zlib
-
-        from duck_server_spark.engine.types import spark_type_to_pg_oid
-
-        def _oid(sname: str) -> int:
-            return zlib.crc32(sname.encode()) & 0x7FFFFFFF
-
-        databases = spark.catalog.listDatabases()
-        dbs = [Row(name=d.name) for d in databases]
-        spark.createDataFrame(dbs or [], "name string").createOrReplaceTempView("system_databases")
-        current_db = spark.catalog.currentDatabase()
-        tabs, cols = [], []
-        ns_rows = [Row(oid=_oid(d.name), nspname=d.name) for d in databases]
-        cls_rows, att_rows = [], []
-        # DuckDB's own introspection TVFs (round 9): duckdb_tables /
-        # duckdb_views / duckdb_columns as snapshot views from the SAME
-        # sweep — IDEs and scripts written for the reference query them
-        dt_rows, dv_rows, dc_rows = [], [], []
-        # round 10 (VERDICT r9 item 2): duckdb_constraints() from the
-        # constraint registry, in the SAME sweep. constraint_text forms
-        # pinned vs live DuckDB 1.0: PRIMARY KEY(a, b) / UNIQUE(x, y) /
-        # NOT NULL (one row per column, incl. PK-implied) / CHECK((e))
-        # with the bare (e) in `expression` / FOREIGN KEY (x) REFERENCES
-        # p(id). Registry keys are current-database bare names, so only
-        # current-db tables carry rows — same scope as enforcement.
-        dcon_rows = []
-        # SQL-standard information_schema.tables/columns (round 13):
-        # the previous mapping aliased them to the CH-shaped system.*
-        # views, so standard clients (JDBC metadata, BI tools) got
-        # UNRESOLVED_COLUMN for table_type / column_default /
-        # is_nullable / ordinal_position. Shapes pinned vs live duck:
-        # table_schema='main', table_type 'BASE TABLE'/'VIEW',
-        # is_nullable 'YES'/'NO', column_default as DDL text.
-        ist_rows, isc_rows = [], []
-        # ONE catalog sweep builds system.* AND the pg_catalog triple
-        # (review finding: two identical walks doubled DDL latency).
-        # Schemas come from one QUALIFIED analysis per table (review
-        # finding: a bare spark.table(name) resolved every database's
-        # "users" to the current one — wrong attrs cross-database).
-        for d in databases:
-            for t in spark.catalog.listTables(d.name):
-                tabs.append(Row(database=d.name, name=t.name, engine=t.tableType or "VIEW"))
-                internal = t.name in _BOOTSTRAP_VIEW_NAMES or any(
-                    mark in t.name for mark in _INTERNAL_TABLE_MARKS
-                )
-                try:
-                    # temp views have no database: resolve them bare
-                    qual = t.name if t.isTemporary else f"`{d.name}`.`{t.name}`"
-                    fields = spark.table(qual).schema.fields
-                except Exception:  # noqa: BLE001 — unreadable relation
-                    continue
-                for c in fields:
-                    cols.append(
-                        Row(database=d.name, table=t.name, name=c.name, type=c.dataType.simpleString())
-                    )
-                if internal:
-                    continue
-                is_table = (t.tableType or "").upper() == "MANAGED"
-                if is_table:
-                    # DuckDB's duckdb_tables() lists BASE TABLES only —
-                    # views live in duckdb_views() (pinned live; review
-                    # finding: phantom 'tables' broke view enumeration)
-                    dt_rows.append(
-                        Row(
-                            database_name=d.name,
-                            schema_name="main",
-                            table_name=t.name,
-                            temporary=bool(t.isTemporary),
-                        )
-                    )
-                else:
-                    dv_rows.append(
-                        Row(
-                            database_name=d.name,
-                            schema_name="main",
-                            view_name=t.name,
-                            temporary=bool(t.isTemporary),
-                        )
-                    )
-                rel_oid = _oid(f"{d.name}.{t.name}")
-                cls_rows.append(
-                    Row(
-                        oid=rel_oid,
-                        relname=t.name,
-                        relnamespace=_oid(d.name),
-                        relkind="r" if is_table else "v",
-                    )
-                )
-                # ONE not-null set + ONE field walk feeds both
-                # duckdb_columns and pg_attribute (review finding: the
-                # duplicated comprehension/loops could silently drift —
-                # is_nullable and attnotnull must stay complements)
-                cons = (
-                    self.constraints.get(t.name) if d.name == current_db else []
-                )
-                nn = {
-                    c
-                    for cc in cons
-                    if cc["kind"] in ("notnull", "primary")
-                    for c in cc["cols"]
-                }
-                ist_rows.append(
-                    Row(
-                        table_catalog=d.name,
-                        table_schema="main",
-                        table_name=t.name,
-                        table_type="BASE TABLE" if is_table else "VIEW",
-                    )
-                )
-                for i, f in enumerate(fields, start=1):
-                    notnull = (f.name in nn) or (not f.nullable)
-                    meta = f.metadata if isinstance(f.metadata, dict) else {}
-                    isc_rows.append(
-                        Row(
-                            table_catalog=d.name,
-                            table_schema="main",
-                            table_name=t.name,
-                            column_name=f.name,
-                            ordinal_position=i,
-                            column_default=meta.get("CURRENT_DEFAULT"),
-                            is_nullable="NO" if notnull else "YES",
-                            data_type=_duckdb_type_name(f.dataType),
-                        )
-                    )
-                    dc_rows.append(
-                        Row(
-                            database_name=d.name,
-                            schema_name="main",
-                            table_name=t.name,
-                            column_name=f.name,
-                            column_index=i,
-                            data_type=_duckdb_type_name(f.dataType),
-                            is_nullable=not notnull,
-                        )
-                    )
-                    att_rows.append(
-                        Row(
-                            attrelid=rel_oid,
-                            attname=f.name,
-                            atttypid=spark_type_to_pg_oid(f.dataType),
-                            attnum=i,
-                            attnotnull=notnull,
-                            attisdropped=False,
-                        )
-                    )
-                if is_table and cons:
-                    col_idx = {f.name.lower(): ix for ix, f in enumerate(fields)}
-                    con_ix = iter(range(10**6))
-
-                    def _con_row(ctype, ctext, ccols, expr=None):
-                        dcon_rows.append(
-                            Row(
-                                database_name=d.name,
-                                database_oid=_oid(d.name),
-                                schema_name="main",
-                                schema_oid=_oid(f"{d.name}.main"),
-                                table_name=t.name,
-                                table_oid=rel_oid,
-                                constraint_index=next(con_ix),
-                                constraint_type=ctype,
-                                constraint_text=ctext,
-                                expression=expr,
-                                constraint_column_indexes=[
-                                    col_idx[c.lower()]
-                                    for c in ccols
-                                    if c.lower() in col_idx
-                                ],
-                                constraint_column_names=list(ccols),
-                            )
-                        )
-
-                    pk_cols: list[str] = []
-                    nn_emitted: set[str] = set()
-                    for cc in cons:
-                        kind, ccols = cc["kind"], cc.get("cols", [])
-                        joined = ", ".join(ccols)
-                        if kind == "primary":
-                            _con_row("PRIMARY KEY", f"PRIMARY KEY({joined})", ccols)
-                            pk_cols = list(ccols)
-                        elif kind == "unique":
-                            _con_row("UNIQUE", f"UNIQUE({joined})", ccols)
-                        elif kind == "notnull":
-                            for c in ccols:
-                                _con_row("NOT NULL", "NOT NULL", [c])
-                                nn_emitted.add(c.lower())
-                        elif kind == "check":
-                            e = cc.get("expr", "")
-                            _con_row("CHECK", f"CHECK(({e}))", ccols, f"({e})")
-                        elif kind == "foreign":
-                            ref_t = cc.get("ref_table", "")
-                            ref_cols = cc.get("ref_cols") or [
-                                c
-                                for pc in self.constraints.get(ref_t)
-                                if pc["kind"] == "primary"
-                                for c in pc["cols"]
-                            ]
-                            _con_row(
-                                "FOREIGN KEY",
-                                f"FOREIGN KEY ({joined}) REFERENCES "
-                                f"{ref_t}({', '.join(ref_cols)})",
-                                ccols,
-                            )
-                    # DuckDB emits ONE NOT NULL row per PK column (after
-                    # the explicit constraints; pinned live) — skip
-                    # columns already emitted by an explicit NOT NULL
-                    # (review finding: `id INT PRIMARY KEY NOT NULL`
-                    # double-emitted, DuckDB shows exactly one row)
-                    for c in pk_cols:
-                        if c.lower() not in nn_emitted:
-                            _con_row("NOT NULL", "NOT NULL", [c])
-        spark.createDataFrame(tabs or [], "database string, name string, engine string").createOrReplaceTempView("system_tables")
-        spark.createDataFrame(cols or [], "database string, table string, name string, type string").createOrReplaceTempView("system_columns")
-        spark.createDataFrame(
-            ist_rows or [],
-            "table_catalog string, table_schema string, table_name string,"
-            " table_type string",
-        ).createOrReplaceTempView("info_schema_tables")
-        spark.createDataFrame(
-            isc_rows or [],
-            "table_catalog string, table_schema string, table_name string,"
-            " column_name string, ordinal_position int,"
-            " column_default string, is_nullable string, data_type string",
-        ).createOrReplaceTempView("info_schema_columns")
-        spark.createDataFrame(
-            [Row(catalog_name=d.name, schema_name="main") for d in databases]
-            or [],
-            "catalog_name string, schema_name string",
-        ).createOrReplaceTempView("info_schema_schemata")
-        catalog_fns = spark.catalog.listFunctions()
-        funcs = [Row(name=f.name) for f in catalog_fns][:500]
-        spark.createDataFrame(funcs or [], "name string").createOrReplaceTempView("system_functions")
-        # duckdb_functions(): SQL macros from the macro registry (kind →
-        # DuckDB's macro/table_macro, definition text verbatim) + the
-        # engine's builtin surface from the same listFunctions sweep
-        # (function_type scalar/aggregate from a pinned aggregate set,
-        # internal=True). 18-column shape pinned vs live DuckDB 1.0.
-        fn_rows = []
-        for mname, rec in sorted(self.macros.names().items()):
-            is_table_macro = rec.get("kind") == "table"
-            body = rec.get("body")
-            fn_rows.append(
-                Row(
-                    database_name=current_db,
-                    database_oid=_oid(current_db),
-                    schema_name="main",
-                    function_name=mname,
-                    function_type="table_macro" if is_table_macro else "macro",
-                    description=None,
-                    comment=None,
-                    tags=None,
-                    return_type=None,
-                    parameters=list(rec.get("params", [])),
-                    parameter_types=[None] * len(rec.get("params", [])),
-                    varargs=None,
-                    # DuckDB prints scalar macro bodies as a
-                    # parenthesized expression — pinned live
-                    macro_definition=(
-                        body if is_table_macro or body is None else f"({body})"
-                    ),
-                    has_side_effects=None,
-                    internal=False,
-                    function_oid=_oid(f"macro.{mname}"),
-                    example=None,
-                    stability=None,
-                )
-            )
-        for f in catalog_fns:
-            fname = f.name.lower()
-            fn_rows.append(
-                Row(
-                    database_name="system",
-                    database_oid=_oid("system"),
-                    schema_name="main",
-                    function_name=f.name,
-                    function_type=(
-                        "aggregate" if fname in _AGGREGATE_FN_NAMES else "scalar"
-                    ),
-                    description=f.description,
-                    comment=None,
-                    tags=None,
-                    return_type=None,
-                    parameters=None,
-                    parameter_types=None,
-                    varargs=None,
-                    macro_definition=None,
-                    has_side_effects=None,
-                    internal=True,
-                    function_oid=_oid(f"fn.{fname}"),
-                    example=None,
-                    stability=None,
-                )
-            )
-        spark.createDataFrame(
-            fn_rows or [],
-            "database_name string, database_oid bigint, schema_name string, "
-            "function_name string, function_type string, description string, "
-            "comment string, tags map<string,string>, return_type string, "
-            "parameters array<string>, parameter_types array<string>, "
-            "varargs string, macro_definition string, "
-            "has_side_effects boolean, internal boolean, "
-            "function_oid bigint, example string, stability string",
-        ).createOrReplaceTempView("duckdb_functions")
-        spark.createDataFrame(
-            ns_rows or [], "oid int, nspname string"
-        ).createOrReplaceTempView("pg_namespace")
-        spark.createDataFrame(
-            cls_rows or [], "oid int, relname string, relnamespace int, relkind string"
-        ).createOrReplaceTempView("pg_class")
-        spark.createDataFrame(
-            att_rows or [],
-            "attrelid int, attname string, atttypid int, attnum int, "
-            "attnotnull boolean, attisdropped boolean",
-        ).createOrReplaceTempView("pg_attribute")
-        spark.createDataFrame(
-            dt_rows or [],
-            "database_name string, schema_name string, table_name string, "
-            "temporary boolean",
-        ).createOrReplaceTempView("duckdb_tables")
-        spark.createDataFrame(
-            dv_rows or [],
-            "database_name string, schema_name string, view_name string, "
-            "temporary boolean",
-        ).createOrReplaceTempView("duckdb_views")
-        spark.createDataFrame(
-            dc_rows or [],
-            "database_name string, schema_name string, table_name string, "
-            "column_name string, column_index int, data_type string, "
-            "is_nullable boolean",
-        ).createOrReplaceTempView("duckdb_columns")
-        spark.createDataFrame(
-            dcon_rows or [],
-            "database_name string, database_oid bigint, schema_name string, "
-            "schema_oid bigint, table_name string, table_oid bigint, "
-            "constraint_index bigint, constraint_type string, "
-            "constraint_text string, expression string, "
-            "constraint_column_indexes array<bigint>, "
-            "constraint_column_names array<string>",
-        ).createOrReplaceTempView("duckdb_constraints")
-        # duckdb_schemas(): one `main` row per database — the same
-        # database→database, schema→"main" mapping duckdb_tables uses;
-        # internal=True matches DuckDB's own `main` row (pinned live)
-        spark.createDataFrame(
-            [
-                Row(
-                    oid=_oid(db.name),
-                    database_name=db.name,
-                    database_oid=_oid(db.name),
-                    schema_name="main",
-                    comment=None,
-                    tags=None,
-                    internal=True,
-                    sql=None,
-                )
-                for db in databases
-            ]
-            or [],
-            "oid bigint, database_name string, database_oid bigint, "
-            "schema_name string, comment string, tags map<string,string>, "
-            "internal boolean, sql string",
-        ).createOrReplaceTempView("duckdb_schemas")
-        # duckdb_settings(): the shared GUC table (the engine's settings
-        # surface — SHOW/SET/pg_settings read the same dict) plus the
-        # engine-truth `threads` key under DuckDB's canonical name.
-        # Shape pinned vs live DuckDB 1.0 (name/value/description/
-        # input_type/scope); metadata-only, no jobs.
-        from duck_server_spark.engine.gucs import ALL_GUCS
-
-        setting_rows = [
-            Row(
-                name="threads",
-                value=str(spark.sparkContext.defaultParallelism),
-                description="The number of total threads used by the system.",
-                input_type="BIGINT",
-                scope="GLOBAL",
-            )
-        ] + [
-            Row(name=k, value=v[0], description=v[1], input_type="VARCHAR", scope="LOCAL")
-            for k, v in sorted(ALL_GUCS.items())
-        ]
-        spark.createDataFrame(
-            setting_rows,
-            "name string, value string, description string, "
-            "input_type string, scope string",
-        ).createOrReplaceTempView("duckdb_settings")
-        # Second introspection block (round 10): duckdb_databases /
-        # duckdb_sequences / duckdb_indexes / duckdb_keywords /
-        # duckdb_types — the rest of the TVF surface embedded DuckDB
-        # serves behind the reference's delegation points. Shapes pinned
-        # vs live DuckDB 1.x; values are engine truth (warehouse paths,
-        # the sequence/index registries, this dialect's keyword list).
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        spark.createDataFrame(
-            [
-                Row(
-                    database_name=db.name,
-                    database_oid=_oid(db.name),
-                    path=(
-                        warehouse
-                        if db.name == "default"
-                        else os.path.join(warehouse, f"{db.name}.db")
-                    ),
-                    comment=None,
-                    tags=None,
-                    # type='duckdb' keeps client feature-switching on the
-                    # path the reference's embedded engine reports
-                    internal=False,
-                    type="duckdb",
-                    readonly=False,
-                )
-                for db in databases
-            ]
-            or [],
-            "database_name string, database_oid bigint, path string, "
-            "comment string, tags map<string,string>, internal boolean, "
-            "type string, readonly boolean",
-        ).createOrReplaceTempView("duckdb_databases")
-        seq_rows = []
-        for sname, rec in sorted(self.sequences._load().items()):
-            inc = rec.get("inc", 1)
-            nxt = rec.get("next")
-            # records persisted before round 10 lack "start" — the
-            # current high-water mark is the only honest approximation
-            # (start_value may over-report and last_value under-report
-            # for such sequences; newly created ones are exact)
-            start = rec.get("start", nxt)
-            used = "start" in rec and nxt != rec["start"]
-            # DuckDB's sql text reflects the CURRENT high-water mark in
-            # START (pinned live); last_value is NULL until first use
-            seq_rows.append(
-                Row(
-                    database_name=current_db,
-                    database_oid=_oid(current_db),
-                    schema_name="main",
-                    schema_oid=_oid(f"{current_db}.main"),
-                    sequence_name=sname,
-                    sequence_oid=_oid(f"seq.{sname}"),
-                    comment=None,
-                    tags=None,
-                    temporary=False,
-                    start_value=start,
-                    min_value=1 if inc > 0 else -(2**63),
-                    max_value=2**63 - 1 if inc > 0 else -1,
-                    increment_by=inc,
-                    cycle=False,
-                    last_value=(nxt - inc) if used else None,
-                    sql=(
-                        f"CREATE SEQUENCE {sname} INCREMENT BY {inc} "
-                        f"MINVALUE {1 if inc > 0 else -(2**63)} "
-                        f"MAXVALUE {2**63 - 1 if inc > 0 else -1} "
-                        f"START {nxt} NO CYCLE;"
-                    ),
-                )
-            )
-        spark.createDataFrame(
-            seq_rows or [],
-            "database_name string, database_oid bigint, schema_name string, "
-            "schema_oid bigint, sequence_name string, sequence_oid bigint, "
-            "comment string, tags map<string,string>, temporary boolean, "
-            "start_value bigint, min_value bigint, max_value bigint, "
-            "increment_by bigint, cycle boolean, last_value bigint, sql string",
-        ).createOrReplaceTempView("duckdb_sequences")
-        idx_rows = []
-        for iname, rec in sorted(self.indexes.items()):
-            itable = rec.get("table", "")
-            icols = rec.get("cols", [])
-            idx_rows.append(
-                Row(
-                    database_name=current_db,
-                    database_oid=_oid(current_db),
-                    schema_name="main",
-                    schema_oid=_oid(f"{current_db}.main"),
-                    index_name=iname,
-                    index_oid=_oid(f"idx.{iname}"),
-                    table_name=itable,
-                    table_oid=_oid(f"{current_db}.{itable}"),
-                    comment=None,
-                    tags=None,
-                    is_unique=bool(rec.get("unique")),
-                    is_primary=False,
-                    expressions=None,
-                    sql=(
-                        f"CREATE {'UNIQUE ' if rec.get('unique') else ''}INDEX "
-                        f"{iname} ON {itable}({', '.join(icols)});"
-                    ),
-                )
-            )
-        spark.createDataFrame(
-            idx_rows or [],
-            "database_name string, database_oid bigint, schema_name string, "
-            "schema_oid bigint, index_name string, index_oid bigint, "
-            "table_name string, table_oid bigint, comment string, "
-            "tags map<string,string>, is_unique boolean, is_primary boolean, "
-            "expressions string, sql string",
-        ).createOrReplaceTempView("duckdb_indexes")
-        # keywords: THIS dialect's quoting-sensitivity list (the same
-        # set normalize_quoted_idents keeps backticked) as 'reserved' —
-        # engine truth, not a transcript of DuckDB's 479-row table
-        from duck_server_spark.plans.rewrites import _QUOTED_IDENT_KEYWORDS
-
-        spark.createDataFrame(
-            [
-                Row(keyword_name=k, keyword_category="reserved")
-                for k in sorted(_QUOTED_IDENT_KEYWORDS)
-            ],
-            "keyword_name string, keyword_category string",
-        ).createOrReplaceTempView("duckdb_keywords")
-        # extensions: DuckDB 1.0's 9-column shape (paren-only TVF there
-        # — the bare spelling is a Catalog Error in DuckDB; serving the
-        # view under both spellings is a harmless superset). Rows are
-        # ENGINE TRUTH, not a transcript: the capability packs DuckDB
-        # ships as always-loaded extensions that this engine genuinely
-        # provides through Spark built-ins.
-        spark.createDataFrame(
-            [
-                Row(
-                    extension_name=n,
-                    loaded=True,
-                    installed=True,
-                    install_path="(built-in)",
-                    description=desc,
-                    aliases=[],
-                    extension_version="",
-                    install_mode="STATICALLY_LINKED",
-                    installed_from="",
-                )
-                for n, desc in (
-                    ("json", "JSON functions (from_json/to_json/json_tuple)"),
-                    ("parquet", "Native columnar Parquet read/write"),
-                    ("icu", "Collations and time zones (session TZ pinned UTC)"),
-                )
-            ],
-            "extension_name string, loaded boolean, installed boolean, "
-            "install_path string, description string, "
-            "aliases array<string>, extension_version string, "
-            "install_mode string, installed_from string",
-        ).createOrReplaceTempView("duckdb_extensions")
-        spark.createDataFrame(
-            [
-                Row(
-                    database_name="system",
-                    database_oid=_oid("system"),
-                    schema_name="main",
-                    schema_oid=_oid("system.main"),
-                    type_oid=_oid(f"type.{n}"),
-                    type_name=n,
-                    type_size=sz,
-                    logical_type=lt,
-                    type_category=cat,
-                    comment=None,
-                    tags=None,
-                    internal=True,
-                    labels=None,
-                )
-                for n, sz, lt, cat in _DUCKDB_TYPE_ROWS
-            ],
-            "database_name string, database_oid bigint, schema_name string, "
-            "schema_oid bigint, type_oid bigint, type_name string, "
-            "type_size bigint, logical_type string, type_category string, "
-            "comment string, tags map<string,string>, internal boolean, "
-            "labels array<string>",
-        ).createOrReplaceTempView("duckdb_types")
-        # information_schema constraint views (round 7): JDBC metadata's
-        # getPrimaryKeys/getImportedKeys read these; names match the
-        # runtime-generated constraint names used in error messages
-        tc_rows, kcu_rows = [], []
-        type_names = {
-            "primary": "PRIMARY KEY",
-            "unique": "UNIQUE",
-            "foreign": "FOREIGN KEY",
-            "check": "CHECK",
-        }
-        for tbl, cons in self.constraints._load().items():
-            for c in cons:
-                kind = c.get("kind")
-                if kind not in type_names:
-                    continue
-                cols = c.get("cols", [])
-                if kind == "primary":
-                    cname = f"{tbl}_pkey"
-                elif kind == "check":
-                    cname = f"{tbl}_{'_'.join(cols)}_check" if cols else f"{tbl}_check"
-                else:
-                    suffix = "fkey" if kind == "foreign" else "key"
-                    cname = f"{tbl}_{'_'.join(cols)}_{suffix}"
-                tc_rows.append(
-                    Row(
-                        constraint_name=cname,
-                        table_name=tbl,
-                        constraint_type=type_names[kind],
-                    )
-                )
-                for i, col in enumerate(cols, start=1):
-                    kcu_rows.append(
-                        Row(
-                            constraint_name=cname,
-                            table_name=tbl,
-                            column_name=col,
-                            ordinal_position=i,
-                        )
-                    )
-        spark.createDataFrame(
-            tc_rows or [],
-            "constraint_name string, table_name string, constraint_type string",
-        ).createOrReplaceTempView("table_constraints")
-        spark.createDataFrame(
-            kcu_rows or [],
-            "constraint_name string, table_name string, column_name string, "
-            "ordinal_position int",
-        ).createOrReplaceTempView("key_column_usage")
-        # pg_settings (round 8): psql \dconfig and ORMs introspect it;
-        # same shared GUC table SHOW ALL / ParameterStatus report
-        from duck_server_spark.engine.gucs import ALL_GUCS
-
-        spark.createDataFrame(
-            [Row(name=k, setting=v[0], short_desc=v[1]) for k, v in sorted(ALL_GUCS.items())],
-            "name string, setting string, short_desc string",
-        ).createOrReplaceTempView("pg_settings")
-
-    @staticmethod
-    def _shim_catalog_refs(q: str) -> str:
-        def repl(m: re.Match) -> str:
-            name = m.group(0).lower()
-            mapping = {
-                "system.databases": "system_databases",
-                "system.tables": "system_tables",
-                "system.columns": "system_columns",
-                "system.functions": "system_functions",
-                "information_schema.schemata": "info_schema_schemata",
-                "information_schema.tables": "info_schema_tables",
-                "information_schema.columns": "info_schema_columns",
-                "information_schema.constraint_column_usage": "constraint_column_usage",
-                "information_schema.table_constraints": "table_constraints",
-                "information_schema.key_column_usage": "key_column_usage",
-                "pg_catalog.pg_type": "pg_type",
-                "pg_catalog.pg_class": "pg_class",
-                "pg_catalog.pg_namespace": "pg_namespace",
-                "pg_catalog.pg_attribute": "pg_attribute",
-                "pg_catalog.pg_settings": "pg_settings",
-            }
-            return mapping.get(name, m.group(0))
-
-        return _CATALOG_REF.sub(repl, q)
-
     # ----------------------------------------------------------- queries
 
     def _prepare_sql(
@@ -1351,9 +561,8 @@ class Engine:
         self._guard_positional_join(q)
         q = self._restore_stored_case(q, dialect, probe_cache)
         q = rewrites.rewrite_ch_query(q) if dialect == "ch" else rewrites.rewrite_pg_query(q)
-        if _CATALOG_REF.search(q):
-            self._refresh_catalog_views()
-            q = self._shim_catalog_refs(q)
+        if catalog.CATALOG_REF.search(q):
+            q = catalog.prepare(self, q)
         return q
 
     def _check_macro_views(self, q: str, dialect: str = "pg") -> None:
@@ -3517,15 +2726,14 @@ class Engine:
 
     def _user_table_names(self) -> list[str]:
         """Sorted user-visible table/view names: engine artifacts are
-        filtered out (review finding) — the bootstrap compat views and
-        transient shadow/staging tables are names the reference's
+        filtered out (review finding) — the compat views and transient
+        shadow/staging tables are names the reference's
         embedded DuckDB never exposes. Shared by SHOW TABLES and the
         PRAGMA show_tables family (one filter policy)."""
         return sorted(
             t.name
             for t in self.spark.catalog.listTables()
-            if t.name not in _BOOTSTRAP_VIEW_NAMES
-            and not any(mark in t.name for mark in _INTERNAL_TABLE_MARKS)
+            if not catalog.is_engine_artifact(t.name)
         )
 
     def _describe(self, target: str, dialect: str) -> DataFrame:
@@ -3568,7 +2776,7 @@ class Engine:
         rows = [
             (
                 f.name,
-                _duckdb_type_name(f.dataType),
+                duckdb_type_name(f.dataType),
                 "NO" if f.name in pk or f.name in nn else "YES",
                 "PRI" if f.name in pk else ("UNI" if f.name in uni else None),
                 (
@@ -3704,7 +2912,7 @@ class Engine:
         for t in self.spark.catalog.listTables():
             if (t.tableType or "").upper() != "MANAGED":
                 continue
-            if any(mark in t.name for mark in _INTERNAL_TABLE_MARKS):
+            if catalog.is_engine_artifact(t.name):
                 continue
             try:
                 self.spark.sql(f"ANALYZE TABLE {t.name} COMPUTE STATISTICS")

@@ -5,8 +5,8 @@ One shared table backs all four read paths a client can take:
   STARTUP_PARAMS, mirroring the reference's pg_conn.go:20-24),
 - `SHOW <guc>` over the wire (wire_server.py fast path),
 - `SHOW ALL` (executor.query — psql's \\dconfig reads this),
-- the `pg_settings` catalog view (executor._refresh_catalog_views —
-  ORMs and psql introspection query it).
+- the `pg_settings` catalog view (engine/catalog.py — ORMs and psql
+  introspection query it).
 
 Values are static session defaults: the engine is an analytics server,
 not a tunable PG instance, so SET is accepted-and-ignored for these

@@ -108,7 +108,7 @@ def _table_info(engine, table: str) -> DataFrame:
     notnull, dflt_value, pk). notnull is True for PK columns too (PK
     implies NOT NULL — pinned vs live DuckDB); dflt_value is the
     declared default's SQL text as a string."""
-    from duck_server_spark.engine.executor import _duckdb_type_name
+    from duck_server_spark.engine.types import duckdb_type_name
 
     spark = engine.spark
     # keep a database qualifier intact — PRAGMA table_info('db.t') must
@@ -154,7 +154,7 @@ def _table_info(engine, table: str) -> DataFrame:
             (
                 i,
                 f.name,
-                _duckdb_type_name(f.dataType),
+                duckdb_type_name(f.dataType),
                 f.name in pk or f.name in nn,
                 str(dflt) if dflt is not None else None,
                 f.name in pk,
@@ -179,7 +179,7 @@ def _show_tables_expanded(engine) -> DataFrame:
     """DuckDB's (database, schema, name, column_names, column_types,
     temporary) listing. Metadata-only: one catalog pass, no data jobs —
     at 100 TB this must stay O(tables), never O(rows)."""
-    from duck_server_spark.engine.executor import _duckdb_type_name
+    from duck_server_spark.engine.types import duckdb_type_name
 
     spark = engine.spark
     db = spark.catalog.currentDatabase()
@@ -192,7 +192,7 @@ def _show_tables_expanded(engine) -> DataFrame:
                 "main",
                 n,
                 [f.name for f in fields],
-                [_duckdb_type_name(f.dataType) for f in fields],
+                [duckdb_type_name(f.dataType) for f in fields],
                 False,
             )
         )

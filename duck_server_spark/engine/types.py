@@ -113,6 +113,39 @@ def spark_type_to_pg_name(dt: T.DataType) -> str:
     return "text"
 
 
+def duckdb_type_name(dt: T.DataType) -> str:
+    """Spark DataType → DuckDB's DESCRIBE type spelling (pinned against
+    live DuckDB in tests/test_compat.py)."""
+    if isinstance(dt, T.ArrayType):
+        return duckdb_type_name(dt.elementType) + "[]"
+    if isinstance(dt, T.DecimalType):
+        return f"DECIMAL({dt.precision},{dt.scale})"
+    if isinstance(dt, T.MapType):
+        return (
+            f"MAP({duckdb_type_name(dt.keyType)}, "
+            f"{duckdb_type_name(dt.valueType)})"
+        )
+    if isinstance(dt, T.StructType):
+        inner = ", ".join(
+            f"{f.name} {duckdb_type_name(f.dataType)}" for f in dt.fields
+        )
+        return f"STRUCT({inner})"
+    return {
+        "tinyint": "TINYINT",
+        "smallint": "SMALLINT",
+        "int": "INTEGER",
+        "bigint": "BIGINT",
+        "float": "FLOAT",
+        "double": "DOUBLE",
+        "string": "VARCHAR",
+        "boolean": "BOOLEAN",
+        "date": "DATE",
+        "timestamp": "TIMESTAMP",
+        "timestamp_ntz": "TIMESTAMP",
+        "binary": "BLOB",
+    }.get(dt.simpleString(), dt.simpleString().upper())
+
+
 _TS_FMT = "%Y-%m-%d %H:%M:%S"
 
 

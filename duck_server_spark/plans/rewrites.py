@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import re
 
+from duck_server_spark.engine import catalog
+
 VERSION_STRING = "23.3.1.2823"  # ch_server.go:160 literal
 SERVER_VERSION = "16.0-sparksql-4.1"  # pg_conn.go:22 pattern
 
@@ -2605,15 +2607,13 @@ def rewrite_from_first(q: str) -> str:
     return q
 
 
-# DuckDB's introspection TVFs are served as snapshot views here, so the
-# paren-call spelling drops its parens (round 9; the bare spelling
-# `FROM duckdb_tables` is valid DuckDB too)
+# DuckDB's introspection TVFs are served as catalog views here
+# (engine/catalog.py), so the paren-call spelling drops its parens (the
+# bare spelling `FROM duckdb_tables` is valid DuckDB too)
 _DUCKDB_TVF_VIEWS = re.compile(
-    r"\b(duckdb_tables|duckdb_views|duckdb_columns|duckdb_constraints"
-    r"|duckdb_schemas|duckdb_settings|duckdb_functions|duckdb_databases"
-    r"|duckdb_sequences|duckdb_indexes|duckdb_keywords|duckdb_types"
-    r"|duckdb_extensions)"
-    r"\s*\(\s*\)",
+    r"\b("
+    + "|".join(s for s in catalog.SPELLINGS if s.startswith("duckdb_"))
+    + r")\s*\(\s*\)",
     re.IGNORECASE,
 )
 
