@@ -37,13 +37,15 @@ import secrets
 import threading
 import time
 
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duck_server_spark.engine import catalog
 from duck_server_spark.engine import constraints as cst
+from duck_server_spark.engine.errors import PgError
 from duck_server_spark.engine.session import release_staged, stage_frame
-from duck_server_spark.engine.transfer import iter_rows
+from duck_server_spark.engine.transfer import arrow_schema, iter_batches
 from duck_server_spark.engine.types import duckdb_type_name
 from duck_server_spark.plans import rewrites
 
@@ -4219,9 +4221,13 @@ class Engine:
 
 
 class _BatchStream:
-    """One dedicated producer thread pulls transfer.iter_rows and feeds a
-    bounded queue; consumers call next_batch() from any thread. An
-    `owned` result's staged frame is released when the producer ends."""
+    """One dedicated producer thread reads transfer.iter_batches and
+    feeds a bounded queue with record batches of at most batch_size
+    rows (zero-copy slices of Spark's batches); consumers call
+    next_batch() from any thread. The Arrow schema is computed here, on
+    the caller's thread, so a result type Arrow cannot carry fails
+    before any row description goes out. An `owned` result's staged
+    frame is released when the producer ends."""
 
     _QUEUE_DEPTH = 4
 
@@ -4230,13 +4236,20 @@ class _BatchStream:
     ):
         import queue
 
+        try:
+            schema = arrow_schema(df)
+        except PySparkTypeError as e:
+            if owned:
+                release_staged(spark, df)
+            raise PgError("0A000", f"result type not supported: {e}") from None
         self._spark = spark
         self._job_group = job_group
         self._queue: "queue.Queue" = queue.Queue(maxsize=self._QUEUE_DEPTH)
         self._closed = False
+        self._finished = False
         self._owned = owned
         self._thread = threading.Thread(
-            target=self._produce, args=(df, desc, batch_size), daemon=True
+            target=self._produce, args=(df, desc, batch_size, schema), daemon=True
         )
         self._thread.start()
 
@@ -4253,25 +4266,21 @@ class _BatchStream:
                 continue
         return False
 
-    def _produce(self, df, desc: str, batch_size: int) -> None:
+    def _produce(self, df, desc: str, batch_size: int, schema) -> None:
         sc = self._spark.sparkContext
         if self._job_group:
             sc.setJobGroup(self._job_group, desc[:100], interruptOnCancel=True)
         end = None  # EOF
-        rows = iter_rows(df)
+        batches = iter_batches(df, schema)
         try:
-            buf: list[tuple] = []
-            for row in rows:
-                buf.append(row)
-                if len(buf) >= batch_size:
-                    if not self._put(buf):
+            for batch in batches:
+                for start in range(0, len(batch), batch_size):
+                    if not self._put(batch.slice(start, batch_size)):
                         return
-                    buf = []
-            self._put(buf)
         except BaseException as e:  # noqa: BLE001 — relayed to the consumer
             end = e
         finally:
-            rows.close()
+            batches.close()
             if self._job_group:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             if self._owned:
@@ -4280,11 +4289,12 @@ class _BatchStream:
         # statement's reply never races it
         self._put(end)
 
-    def next_batch(self, timeout: float | None = None) -> list[tuple] | None:
-        """Blocking: → batch of row tuples, or None at EOF. Re-raises
-        producer exceptions (incl. job-group cancellation). With a
-        timeout, raises queue.Empty so the caller can poll liveness
-        (e.g. client-disconnect detection) while the query computes."""
+    def next_batch(self, timeout: float | None = None):
+        """Blocking: → a pyarrow RecordBatch of 1..batch_size rows, or
+        None at EOF. Re-raises producer exceptions (incl. job-group
+        cancellation). With a timeout, raises queue.Empty so the caller
+        can poll liveness (e.g. client-disconnect detection) while the
+        query computes."""
         item = self._queue.get(timeout=timeout)
         if isinstance(item, BaseException):
             raise item
@@ -4299,7 +4309,7 @@ class _BatchStream:
         if self._closed:
             return
         self._closed = True
-        if self._job_group and not getattr(self, "_finished", False):
+        if self._job_group and not self._finished:
             self._spark.sparkContext.cancelJobGroup(self._job_group)
 
 

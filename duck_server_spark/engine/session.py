@@ -12,8 +12,8 @@ Scale notes (100 TB design intent):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
   broadcast-join conversion replace hand-tuned plans at scale.
 - Arrow enabled for the pandas paths (toPandas, pandas UDFs). Results
-  reach the protocol edge as pickled row batches, one partition at a
-  time (engine/transfer.py), not as Arrow.
+  reach the protocol edge as Arrow record batches, one partition at a
+  time (engine/transfer.py), and are rendered a column at a time.
 """
 
 from __future__ import annotations

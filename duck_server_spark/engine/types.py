@@ -1,5 +1,9 @@
 """Type mapping + value rendering: Spark SQL types ↔ PG OIDs ↔ ClickHouse
-type names, plus the two text renderers (PG wire cells, CH formats).
+type names, plus the result renderers. Results arrive as Arrow record
+batches, and each output kind (PG text, PG binary, CH text, JSON) has
+one column renderer that turns an Arrow column into a column of cells;
+the per-value render_* functions serve the nested columns (arrays,
+maps, structs) and the types without a vectorized renderer.
 
 Reference parity: /root/reference/pg_types.go:13-56 (OID table),
 /root/reference/duckdb_types.go:9-33 (duck→pg names),
@@ -19,9 +23,15 @@ import datetime
 import decimal
 import json
 import math
+from json.encoder import encode_basestring_ascii
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # PG OIDs (public catalog constants)
 OID_BOOL = 16
@@ -173,7 +183,7 @@ def render_pg_text(v: Any) -> str | None:
     if isinstance(v, (int, str)):
         return str(v)
     if isinstance(v, decimal.Decimal):
-        return str(v)
+        return format(v, "f")
     if isinstance(v, datetime.datetime):
         return _render_ts(v)
     if isinstance(v, datetime.date):
@@ -212,7 +222,7 @@ def render_ch_text(v: Any) -> str:
     if isinstance(v, (int, str)):
         return str(v)
     if isinstance(v, decimal.Decimal):
-        return str(v)
+        return format(v, "f")
     if isinstance(v, datetime.datetime):
         return _render_ts(v)
     if isinstance(v, datetime.date):
@@ -233,7 +243,7 @@ def render_json_value(v: Any) -> Any:
             return None
         return v
     if isinstance(v, decimal.Decimal):
-        return str(v)
+        return format(v, "f")
     if isinstance(v, datetime.datetime):
         return _render_ts(v)
     if isinstance(v, datetime.date):
@@ -264,42 +274,18 @@ _PG_EPOCH_TS = datetime.datetime(2000, 1, 1)
 
 
 def render_pg_binary(v: Any, dt: T.DataType) -> bytes | None:
-    """One result cell → PG binary-format value. None → SQL NULL
-    (wire length -1, handled by the caller). Types without a binary
-    serializer here fall back to the text bytes of the cell — matching
-    servers that degrade gracefully is kinder than erroring mid-row, and
-    the RowDescription already told the client the OID."""
-    import struct
-
+    """One result cell of a type without a fixed-width binary layout
+    (pg_binary_column encodes those a column at a time) → PG binary
+    value. None → SQL NULL (wire length -1, handled by the caller).
+    Decimals get numeric's binary form; other types fall back to the
+    text bytes of the cell — matching servers that degrade gracefully
+    is kinder than erroring mid-row, and the RowDescription already
+    told the client the OID."""
     if v is None:
         return None
-    if isinstance(dt, T.BooleanType):
-        return b"\x01" if v else b"\x00"
-    if isinstance(dt, T.ShortType):
-        return struct.pack(">h", int(v))
-    if isinstance(dt, (T.IntegerType, T.ByteType)):
-        return struct.pack(">i", int(v))
-    if isinstance(dt, T.LongType):
-        return struct.pack(">q", int(v))
-    if isinstance(dt, T.FloatType):
-        return struct.pack(">f", float(v))
-    if isinstance(dt, T.DoubleType):
-        return struct.pack(">d", float(v))
-    if isinstance(dt, T.DateType):
-        return struct.pack(">i", (v - _PG_EPOCH_DATE).days)
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        ts = v.replace(tzinfo=None) if getattr(v, "tzinfo", None) else v
-        delta = ts - _PG_EPOCH_TS
-        micros = (delta.days * 86_400 + delta.seconds) * 1_000_000 + delta.microseconds
-        return struct.pack(">q", micros)
-    if isinstance(dt, T.BinaryType):
-        return bytes(v)
     if isinstance(dt, T.DecimalType):
         return _numeric_binary(decimal.Decimal(v))
-    if isinstance(dt, T.StringType):
-        return str(v).encode()
-    s = render_pg_text(v)
-    return b"" if s is None else s.encode()
+    return render_pg_text(v).encode()
 
 
 def _numeric_binary(d: decimal.Decimal) -> bytes:
@@ -329,6 +315,238 @@ def _numeric_binary(d: decimal.Decimal) -> bytes:
     return struct.pack(">hhhh", len(digits), weight, sign, dscale) + b"".join(
         struct.pack(">h", g) for g in digits
     )
+
+
+# ------------------------------------------------------- column renderers
+#
+# Results arrive as Arrow record batches and are rendered a column at a
+# time: each renderer maps an Arrow column to an Arrow string (or
+# binary) column of cells, NULL where the value is NULL, and the
+# encoders assemble rows from those columns. Floats are rendered with
+# repr (Arrow's cast spells 17.0 as 17 and 1e15 as 1e+15); decimals in
+# plain notation at the column's scale, as DuckDB prints them.
+
+_PG_FLOAT = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+_JSON_FLOAT = {"nan": "null", "inf": "null", "-inf": "null"}
+_BINARY_NUMBERS = {
+    T.ShortType: ">i2",
+    T.ByteType: ">i4",
+    T.IntegerType: ">i4",
+    T.LongType: ">i8",
+    T.FloatType: ">f4",
+    T.DoubleType: ">f8",
+}
+_INTEGERS = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_TIMESTAMPS = (T.TimestampType, T.TimestampNTZType)
+_PG_EPOCH_DAYS = (_PG_EPOCH_DATE - datetime.date(1970, 1, 1)).days  # Arrow counts from 1970
+_PG_EPOCH_US = _PG_EPOCH_DAYS * 86_400_000_000
+
+
+def record_batch(rows: list[tuple], schema: T.StructType) -> pa.RecordBatch:
+    """Python rows → one record batch of `schema`, for results the
+    server computes itself."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
+def _py_values(col: pa.Array, dt: T.DataType) -> list:
+    """A column's values as the Python objects PySpark rows carry
+    (map → dict, struct → Row, day-time interval → timedelta)."""
+    schema = T.StructType([T.StructField("c", dt)])
+    rows = ArrowTableToRowsConversion.convert(
+        pa.table([col], names=["c"]), schema, return_as_tuples=True
+    )
+    return [r[0] for r in rows]
+
+
+def _per_value(col: pa.Array, dt: T.DataType, render, kind=pa.string()) -> pa.Array:
+    return pa.array([None if v is None else render(v) for v in _py_values(col, dt)], kind)
+
+
+def _null_mask(col: pa.Array) -> np.ndarray | None:
+    return col.is_null().to_numpy(zero_copy_only=False) if col.null_count else None
+
+
+def _float_text(col: pa.Array, spelling: dict | None) -> pa.Array:
+    """repr of each value; `spelling` renames nan, inf and -inf."""
+    vals = col.to_numpy(zero_copy_only=False)  # NULLs read as NaN, masked below
+    out = list(map(repr, vals.tolist()))
+    if spelling and not np.isfinite(vals).all():
+        out = [spelling.get(s, s) for s in out]
+    return pa.array(out, pa.string(), mask=_null_mask(col))
+
+
+def _decimal_text(col: pa.Array) -> pa.Array:
+    """Plain notation at the column's scale. Arrow's cast, like
+    str(Decimal), switches to E-notation below 1e-6 (0.E-10)."""
+    out = col.cast(pa.string())
+    if pc.any(pc.match_substring(out, "E")).as_py():
+        out = pa.array(
+            [None if v is None else format(v, "f") for v in col.to_pylist()], pa.string()
+        )
+    return out
+
+
+def _timestamp_text(col: pa.Array) -> pa.Array:
+    """_render_ts a column at a time: the whole seconds as
+    'YYYY-MM-DD HH:MM:SS' (Arrow's cast of timestamp[s]; pc.strftime is
+    ~30× slower), then '.%06d' where the microseconds are non-zero."""
+    secs, micros = np.divmod(col.cast(pa.int64()).fill_null(0).to_numpy(), 1_000_000)
+    out = pa.array(secs, pa.timestamp("s"), mask=_null_mask(col)).cast(pa.string())
+    if micros.any():
+        frac = pc.utf8_lpad(pa.array(micros).cast(pa.string()), 6, "0")
+        out = pc.if_else(pa.array(micros != 0), pc.binary_join_element_wise(out, frac, "."), out)
+    return out
+
+
+def _text_column(col, dt, true: str, false: str, floats, hex_prefix: str, render) -> pa.Array:
+    if isinstance(dt, T.NullType):
+        return pa.nulls(len(col), pa.string())
+    if isinstance(dt, T.BooleanType):
+        return pc.if_else(col, true, false)
+    if isinstance(dt, (*_INTEGERS, T.DateType)):
+        return col.cast(pa.string())
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return _float_text(col, floats)
+    if isinstance(dt, T.DecimalType):
+        return _decimal_text(col)
+    if isinstance(dt, _TIMESTAMPS):
+        return _timestamp_text(col)
+    if isinstance(dt, T.StringType):
+        return col
+    if isinstance(dt, T.BinaryType):
+        return pa.array(
+            [None if b is None else hex_prefix + b.hex() for b in col.to_pylist()], pa.string()
+        )
+    return _per_value(col, dt, render)  # arrays, maps, structs, intervals, …
+
+
+def pg_text_column(col: pa.Array, dt: T.DataType) -> pa.Array:
+    """render_pg_text, a column at a time."""
+    return _text_column(col, dt, "t", "f", _PG_FLOAT, "\\x", render_pg_text)
+
+
+def ch_text_column(col: pa.Array, dt: T.DataType) -> pa.Array:
+    """render_ch_text, a column at a time; NULL stays NULL for each
+    format to spell."""
+    return _text_column(col, dt, "1", "0", None, "", render_ch_text)
+
+
+def _json_strings(col: pa.Array) -> pa.Array:
+    """JSON string literals, escaped as json.dumps does (ASCII only)."""
+    if pc.any(pc.match_substring_regex(col, r'[^ -~]|["\\]')).as_py():
+        return pa.array(
+            [None if s is None else encode_basestring_ascii(s) for s in col.to_pylist()],
+            pa.string(),
+        )
+    return pc.binary_join_element_wise('"', col, '"', "")
+
+
+def json_column(col: pa.Array, dt: T.DataType) -> pa.Array:
+    """json.dumps(render_json_value(v)), a column at a time; 'null' for
+    NULL."""
+    if isinstance(dt, T.BooleanType):
+        out = pc.if_else(col, "true", "false")
+    elif isinstance(dt, _INTEGERS):
+        out = col.cast(pa.string())
+    elif isinstance(dt, (T.FloatType, T.DoubleType)):
+        out = _float_text(col, _JSON_FLOAT)
+    elif isinstance(dt, T.StringType):
+        out = _json_strings(col)
+    elif isinstance(dt, (T.DecimalType, T.DateType, *_TIMESTAMPS, T.BinaryType)):
+        out = _json_strings(ch_text_column(col, dt))
+    else:
+        out = _per_value(
+            col, dt, lambda v: json.dumps(render_json_value(v), separators=(",", ":"))
+        )
+    return out.fill_null("null")
+
+
+def _fixed_cells(values: np.ndarray, col: pa.Array) -> pa.Array:
+    """Fixed-width big-endian values → a binary column, NULL (and
+    empty) where col is NULL."""
+    n, width = len(values), values.dtype.itemsize
+    offsets = np.arange(0, (n + 1) * width, width, dtype=np.int32)
+    validity = None
+    if col.null_count:
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        values = values[valid]
+        offsets[1:] = np.cumsum(valid * width)
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(
+        pa.binary(),
+        n,
+        [validity, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(values))],
+        null_count=col.null_count,
+    )
+
+
+def pg_binary_column(col: pa.Array, dt: T.DataType) -> pa.Array:
+    """render_pg_binary, a column at a time: a binary column of PG
+    binary cells."""
+    fmt = _BINARY_NUMBERS.get(type(dt))
+    if fmt is not None:
+        return _fixed_cells(col.fill_null(0).to_numpy().astype(fmt), col)
+    if isinstance(dt, T.BooleanType):
+        return _fixed_cells(col.fill_null(False).to_numpy(zero_copy_only=False).astype(np.uint8), col)
+    if isinstance(dt, T.DateType):
+        days = col.cast(pa.int32()).fill_null(0).to_numpy() - _PG_EPOCH_DAYS
+        return _fixed_cells(days.astype(">i4"), col)
+    if isinstance(dt, _TIMESTAMPS):
+        micros = col.cast(pa.int64()).fill_null(0).to_numpy() - _PG_EPOCH_US
+        return _fixed_cells(micros.astype(">i8"), col)
+    if isinstance(dt, (T.StringType, T.BinaryType)):
+        return col
+    return _per_value(col, dt, lambda v: render_pg_binary(v, dt), pa.binary())
+
+
+# ------------------------------------------------------- row assembly
+
+
+def offsets_and_data(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A string or binary column's value offsets (len + 1 of them) and
+    its data buffer, as numpy arrays; col[i] is data[off[i]:off[i+1]]."""
+    large = pa.types.is_large_string(col.type) or pa.types.is_large_binary(col.type)
+    kind = np.int64 if large else np.int32
+    _validity, offsets, data = col.buffers()
+    off = np.frombuffer(offsets, kind, len(col) + 1, col.offset * kind().itemsize)
+    return off, np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
+
+
+def join_rows(pieces: list) -> bytes:
+    """Concatenate string columns (without NULLs) and literal strings
+    row by row → every row's bytes, back to back."""
+    rows = pc.binary_join_element_wise(*pieces, "")
+    off, data = offsets_and_data(rows)
+    return data[off[0] : off[-1]].tobytes()
+
+
+def delimited_rows(cells: list[pa.Array], sep: str) -> bytes:
+    """One line per row: its cells joined by `sep`."""
+    pieces = [x for c in cells for x in (sep, c)][1:]
+    return join_rows(pieces + ["\n"])
+
+
+def tsv_escape(cells: pa.Array) -> pa.Array:
+    """Backslash-escape backslash, tab, LF and CR (PG COPY text, CH
+    TabSeparated)."""
+    if pc.any(pc.match_substring_regex(cells, r"[\\\t\n\r]")).as_py():
+        for raw, esc in (("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r")):
+            cells = pc.replace_substring(cells, raw, esc)
+    return cells
+
+
+def csv_quote(cells: pa.Array, specials: str) -> pa.Array:
+    """Double-quote the cells holding a character of `specials`,
+    doubling their quotes (RFC 4180)."""
+    needs = pc.match_substring_regex(cells, f"[{specials}]")
+    if not pc.any(needs).as_py():
+        return cells
+    quoted = pc.binary_join_element_wise('"', pc.replace_substring(cells, '"', '""'), '"', "")
+    return pc.if_else(needs, quoted, cells)
 
 
 def coerce_text_param(s: str) -> Any:

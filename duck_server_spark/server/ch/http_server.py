@@ -233,7 +233,7 @@ class ChRequestHandler(BaseHTTPRequestHandler):
                 if batch is None:
                     break
                 # one chunk per batch; an empty chunk would end the body
-                data = b"".join(map(writer.write_row, batch))
+                data = writer.write_batch(batch)
                 if data:
                     emit(data)
             if comp is not None:

@@ -39,34 +39,43 @@ Concurrency: asyncio sockets; every Spark action runs in a worker thread
 Every result stream (SELECT, COPY TO, DML RETURNING, portal Execute) is
 pulled by one loop, PgConnection._drain, from a _BatchStream whose
 producer thread owns the statement's job group and reads Spark's
-partitions through engine/transfer.py; an encoder per target turns each
-batch into DataRows or CopyData.
+partitions through engine/transfer.py as Arrow record batches; an
+encoder per target renders each batch a column at a time
+(engine/types.py) and writes its DataRows or CopyData at once.
 """
 
 from __future__ import annotations
 
 import asyncio
 import base64
-import csv
 import hashlib
 import hmac
-import io
-import itertools
 import re
 import secrets
 import struct
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from duck_server_spark.engine.errors import PgError
 from duck_server_spark.engine.executor import Engine, parse_verifier
 from duck_server_spark.engine.transactions import TxnOverlay
-from duck_server_spark.engine.types import (
+from duck_server_spark.engine.types import (  # noqa: F401 — the render_* names are perfbench trace hooks
     coerce_text_param,
+    csv_quote,
     decode_pg_binary_param,
+    delimited_rows,
+    offsets_and_data,
     parse_csv_cell,
+    pg_binary_column,
+    pg_text_column,
+    record_batch,
     render_pg_binary,
     render_pg_text,
     spark_type_to_pg_oid,
+    tsv_escape,
 )
 from duck_server_spark.plans import rewrites
 from duck_server_spark.sources.ingest import CsvChunkSplitter, csv_rows_null_aware
@@ -338,24 +347,15 @@ class PgConnection:
             buf += struct.pack(">ihihih", 0, 0, oid, -1, -1, fmt)
         self._send(b"T", buf)
 
-    def send_data_row(self, row: tuple, formats: list | None = None, schema=None) -> None:
-        fmts = self._col_formats(formats, len(row)) if formats else None
-        buf = struct.pack(">h", len(row))
-        for i, v in enumerate(row):
-            if fmts and fmts[i] == 1 and schema is not None:
-                b = render_pg_binary(v, schema.fields[i].dataType)
-                if b is None:
-                    buf += struct.pack(">i", -1)
-                else:
-                    buf += struct.pack(">i", len(b)) + b
-                continue
-            s = render_pg_text(v)
-            if s is None:
-                buf += struct.pack(">i", -1)  # NULL (pg_conn.go:403-405)
-            else:
-                b = s.encode()
-                buf += struct.pack(">i", len(b)) + b
-        self._send(b"D", buf)
+    def send_data_row(self, batch: pa.RecordBatch, formats: list | None, schema) -> None:
+        """One DataRow per row of `batch`, in the Bind result formats,
+        rendered a column at a time and written at once."""
+        fmts = self._col_formats(formats, batch.num_columns)
+        cells = [
+            (pg_binary_column if fmt == 1 else pg_text_column)(col, f.dataType)
+            for col, f, fmt in zip(batch.columns, schema.fields, fmts)
+        ]
+        self.writer.write(_data_rows(cells, batch.num_rows))
 
     def send_command_complete(self, tag: str) -> None:
         self._send(b"C", tag.encode() + b"\x00")
@@ -635,7 +635,7 @@ class PgConnection:
                 return schema
             out = _DataRows(self, portal)
             out.begin(schema)
-            out.send(rows)
+            out.send(record_batch(rows, schema))
             out.end()
             return None
         if _WRITE_VERB.match(q):
@@ -1246,7 +1246,7 @@ class _DataRows:
         self.schema = None  # binary result formats need the dtypes
         self.max_rows = 0
         self.n = 0
-        self.pending: list[tuple] = []
+        self.pending: pa.RecordBatch | None = None
 
     @property
     def full(self) -> bool:
@@ -1256,27 +1256,64 @@ class _DataRows:
         self.schema = schema
         if self.portal is None:
             self.conn.send_row_description(schema)
-        elif self.pending:  # rows a suspended Execute left over
-            self.send([])
+        elif self.pending is not None:  # rows a suspended Execute left over
+            pending, self.pending = self.pending, None
+            self.send(pending)
 
-    def send(self, batch: list[tuple]) -> None:
-        rows = self.pending + batch if self.pending else batch
-        k = min(len(rows), self.max_rows - self.n) if self.max_rows else len(rows)
-        send, formats, schema = self.conn.send_data_row, self.formats, self.schema
-        for row in itertools.islice(rows, k):
-            send(row, formats, schema)
+    def send(self, batch: pa.RecordBatch) -> None:
+        k = min(len(batch), self.max_rows - self.n) if self.max_rows else len(batch)
+        if k:
+            self.conn.send_data_row(batch.slice(0, k), self.formats, self.schema)
         self.n += k
-        self.pending = rows[k:]
+        self.pending = batch.slice(k) if k < len(batch) else None
 
     def end(self) -> None:
         self.conn.send_command_complete(self.tag or f"({self.n} row)")
 
 
+def _data_rows(cells: list[pa.Array], n: int) -> bytes:
+    """The DataRow messages of n rows from their rendered columns: per
+    row 'D', int32 length, int16 column count, then per cell an int32
+    length (-1 for NULL, pg_conn.go:403-405) and the cell's bytes. Each
+    column's lengths and offsets place all of its cells at once."""
+    size = np.full(n, 7, dtype=np.int64)
+    cols = []
+    for col in cells:
+        off, data = offsets_and_data(col)
+        width = lens = np.diff(off)  # Arrow's NULL slots hold no bytes
+        if col.null_count:
+            lens = np.where(col.is_null().to_numpy(zero_copy_only=False), -1, width)
+        size += 4 + width
+        cols.append((lens, width, off, data))
+    starts = np.cumsum(size) - size
+    out = np.empty(int(size.sum()), np.uint8)
+    out[starts] = ord("D")
+    _put_be(out, starts + 1, size - 1, ">i4")
+    _put_be(out, starts + 5, np.full(n, len(cells)), ">i2")
+    pos = starts + 7
+    for lens, width, off, data in cols:
+        _put_be(out, pos, lens, ">i4")
+        pos = pos + 4
+        if off[-1] > off[0]:
+            dest = np.repeat(pos - off[:-1], width) + np.arange(off[0], off[-1])
+            out[dest] = data[off[0] : off[-1]]
+        pos = pos + width
+    return out.tobytes()
+
+
+def _put_be(out: np.ndarray, pos: np.ndarray, values: np.ndarray, fmt: str) -> None:
+    """Write values, big-endian, at byte positions pos of out."""
+    raw = values.astype(fmt).view(np.uint8).reshape(len(values), -1)
+    for k in range(raw.shape[1]):
+        out[pos + k] = raw[:, k]
+
+
 class _CopyRows:
     """COPY TO STDOUT encoder: CopyOutResponse, one CopyData per batch,
     CopyDone, COPY-n tag. PG text format (tab separators, \\N nulls,
-    backslash escapes) or CSV (optional HEADER line), as psql \\copy and
-    JDBC CopyManager expect."""
+    backslash escapes) or CSV (optional HEADER line; NULL and the empty
+    string both as an empty field), as psql \\copy and JDBC CopyManager
+    expect."""
 
     full = False
 
@@ -1284,55 +1321,38 @@ class _CopyRows:
         self.conn = conn
         self.as_csv = as_csv
         self.with_header = as_csv and header
-        self.header: list[str] | None = None  # CSV header not yet sent
+        self.header = b""  # CSV header line, until the first CopyData
+        self.schema = None
         self.n = 0
 
     def begin(self, schema: StructType) -> None:
+        self.schema = schema
         ncols = len(schema.fields)
         self.conn._send(b"H", struct.pack(">bh", 0, ncols) + b"\x00\x00" * ncols)
         if self.with_header:
-            self.header = [f.name for f in schema.fields]
+            names = pa.array([f.name for f in schema.fields], pa.string())
+            self.header = (",".join(csv_quote(names, ',"\n').to_pylist()) + "\n").encode()
 
-    def send(self, batch: list[tuple]) -> None:
+    def send(self, batch: pa.RecordBatch) -> None:
+        cells = [pg_text_column(c, f.dataType) for c, f in zip(batch.columns, self.schema.fields)]
         if self.as_csv:
-            data = self._csv(batch)
+            # csv.writer's QUOTE_MINIMAL with "\n" line ends; a row of
+            # one empty field is written as ""
+            cells = [csv_quote(c, ',"\n').fill_null("") for c in cells]
+            if len(cells) == 1:
+                cells = [pc.if_else(pc.equal(cells[0], ""), '""', cells[0])]
+            data = delimited_rows(cells, ",")
         else:
-            data = "".join(_copy_text_row(r) + "\n" for r in batch).encode()
-        self.conn._send(b"d", data)
+            data = delimited_rows([tsv_escape(c).fill_null("\\N") for c in cells], "\t")
+        self.conn._send(b"d", self.header + data)
+        self.header = b""
         self.n += len(batch)
 
     def end(self) -> None:
-        if self.header is not None:  # no batch came: the header still goes out
-            self.conn._send(b"d", self._csv([]))
+        if self.header:  # no batch came: the header still goes out
+            self.conn._send(b"d", self.header)
         self.conn._send(b"c")  # CopyDone
         self.conn.send_command_complete(f"COPY {self.n}")
-
-    def _csv(self, rows: list[tuple]) -> bytes:
-        buf = io.StringIO()
-        w = csv.writer(buf, lineterminator="\n")
-        if self.header is not None:
-            w.writerow(self.header)
-            self.header = None
-        for row in rows:
-            w.writerow(["" if c is None else c for c in map(render_pg_text, row)])
-        return buf.getvalue().encode()
-
-
-def _copy_text_row(row: tuple) -> str:
-    # PG COPY text format: \N for NULL; escape \, tab, LF, CR
-    out = []
-    for v in row:
-        s = render_pg_text(v)
-        if s is None:
-            out.append("\\N")
-        else:
-            out.append(
-                s.replace("\\", "\\\\")
-                .replace("\t", "\\t")
-                .replace("\n", "\\n")
-                .replace("\r", "\\r")
-            )
-    return "\t".join(out)
 
 
 class PgServer:

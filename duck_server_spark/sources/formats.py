@@ -6,10 +6,12 @@ Reference parity: /root/reference/ch_format.go (readers :86-146, writers
 same header semantics (names row, then CH type names row for
 *AndTypes), `\\N` nulls, 1/0 booleans.
 
-Writers/readers operate on iterables of row tuples + a Spark schema —
-the server layer streams Arrow-collected batches through them, so the
-codec itself never materializes a full result (O(batch) memory, matching
-the reference's row-at-a-time relay, ch_server.go:211-222).
+Writers encode one Arrow record batch at a time, a column at a time
+(engine/types.py renders each column): the server streams a result's
+batches through them as Spark's partitions arrive, so the codec never
+holds a full result (O(batch) memory, matching the reference's
+row-at-a-time relay, ch_server.go:211-222). Readers turn payload bytes
+into typed row tuples for ingest.
 """
 
 from __future__ import annotations
@@ -18,15 +20,23 @@ import csv
 import io
 import json
 from collections.abc import Iterable, Iterator
+from json.encoder import encode_basestring_ascii
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
-from duck_server_spark.engine.types import (
+from duck_server_spark.engine.types import (  # noqa: F401 — the render_* names are perfbench trace hooks
+    ch_text_column,
+    csv_quote,
+    delimited_rows,
+    join_rows,
+    json_column,
     parse_csv_cell,
     render_ch_text,
     render_json_value,
     spark_type_to_ch_name,
+    tsv_escape,
 )
 from duck_server_spark.sources.ingest import CsvChunkSplitter
 
@@ -34,7 +44,7 @@ from duck_server_spark.sources.ingest import CsvChunkSplitter
 
 
 class FormatWriter:
-    """Base: stream rows → bytes chunks."""
+    """Base: stream record batches → bytes chunks."""
 
     content_type = "text/plain; charset=utf-8"
 
@@ -44,7 +54,7 @@ class FormatWriter:
     def header(self) -> bytes:
         return b""
 
-    def write_row(self, row: tuple) -> bytes:
+    def write_batch(self, batch: pa.RecordBatch) -> bytes:
         raise NotImplementedError
 
 
@@ -62,32 +72,19 @@ class _SVWriter(FormatWriter):
             out.append(self.delimiter.join(spark_type_to_ch_name(f.dataType) for f in self.schema.fields))
         return ("".join(x + "\n" for x in out)).encode()
 
-    def write_row(self, row: tuple) -> bytes:
+    def write_batch(self, batch: pa.RecordBatch) -> bytes:
+        cells = [ch_text_column(c, f.dataType) for c, f in zip(batch.columns, self.schema.fields)]
         if self.delimiter == ",":
-            # manual RFC-4180 quoting mirroring Go's csv.Writer (the
-            # reference): quote when the field contains delimiter, quote,
-            # \r or \n — Python's csv.writer leaves a bare \r unquoted,
-            # which its own reader then rejects.
-            cells = []
-            for v in row:
-                s = render_ch_text(v)
-                if any(ch in s for ch in (",", '"', "\n", "\r")):
-                    s = '"' + s.replace('"', '""') + '"'
-                cells.append(s)
-            return (",".join(cells) + "\n").encode()
-        # TSV: escape embedded backslashes/tabs/newlines in VALUES, then
-        # emit the \N marker verbatim for NULLs (duckdb_types.go:88).
-        cells = [
-            "\\N"
-            if v is None
-            else render_ch_text(v)
-            .replace("\\", "\\\\")
-            .replace("\t", "\\t")
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            for v in row
-        ]
-        return ("\t".join(cells) + "\n").encode()
+            # RFC-4180 quoting mirroring Go's csv.Writer (the reference):
+            # quote when the field contains delimiter, quote, \r or \n —
+            # Python's csv.writer leaves a bare \r unquoted, which its
+            # own reader then rejects. NULL is the bare \N marker.
+            cells = [csv_quote(c, ',"\r\n').fill_null("\\N") for c in cells]
+        else:
+            # TSV: escape embedded backslashes/tabs/newlines in VALUES,
+            # then the \N marker verbatim for NULLs (duckdb_types.go:88)
+            cells = [tsv_escape(c).fill_null("\\N") for c in cells]
+        return delimited_rows(cells, self.delimiter)
 
 
 class TabSeparatedWriter(_SVWriter):
@@ -115,9 +112,15 @@ class CSVWithNamesWriter(CSVWriter):
 class JSONEachRowWriter(FormatWriter):
     content_type = "application/x-ndjson; charset=utf-8"
 
-    def write_row(self, row: tuple) -> bytes:
-        obj = {f.name: render_json_value(v) for f, v in zip(self.schema.fields, row)}
-        return (json.dumps(obj, separators=(",", ":")) + "\n").encode()
+    def write_batch(self, batch: pa.RecordBatch) -> bytes:
+        # one object per row, keyed by column name; a repeated name
+        # keeps its first place and its last value, as a dict does
+        last = {f.name: i for i, f in enumerate(self.schema.fields)}
+        pieces = []
+        for k, (name, i) in enumerate(last.items()):
+            pieces.append(("{" if k == 0 else ",") + encode_basestring_ascii(name) + ":")
+            pieces.append(json_column(batch.column(i), self.schema.fields[i].dataType))
+        return join_rows(pieces + ["}\n"])
 
 
 # ---------------------------------------------------------------- readers
@@ -335,9 +338,9 @@ READERS: dict[str, Callable[[T.StructType], FormatReader]] = {
 }
 
 
-def write_all(writer: FormatWriter, rows: Iterable[tuple]) -> Iterator[bytes]:
+def write_all(writer: FormatWriter, batches: Iterable[pa.RecordBatch]) -> Iterator[bytes]:
     h = writer.header()
     if h:
         yield h
-    for row in rows:
-        yield writer.write_row(row)
+    for batch in batches:
+        yield writer.write_batch(batch)

@@ -4,6 +4,7 @@
 import pytest
 from pyspark.sql import types as T
 
+from duck_server_spark.engine.types import record_batch
 from duck_server_spark.sources import formats as fm
 
 SCHEMA = T.StructType(
@@ -17,9 +18,14 @@ SCHEMA = T.StructType(
 ROWS = [(1, "alpha", 1.5, True), (2, "be,ta", -2.0, False), (3, None, None, None)]
 
 
+def _batches(rows):
+    """Writers take the server's input: Arrow record batches."""
+    return [record_batch(rows, SCHEMA)]
+
+
 @pytest.mark.parametrize("fmt", ["TabSeparated", "CSV", "JSONEachRow"])
 def test_roundtrip(fmt):
-    payload = b"".join(fm.write_all(fm.WRITERS[fmt](SCHEMA), ROWS))
+    payload = b"".join(fm.write_all(fm.WRITERS[fmt](SCHEMA), _batches(ROWS)))
     back = list(fm.READERS[fmt](SCHEMA).read(payload))
     assert len(back) == 3
     assert back[0] == (1, "alpha", 1.5, True)
@@ -29,7 +35,7 @@ def test_roundtrip(fmt):
 
 @pytest.mark.parametrize("fmt", ["TabSeparatedWithNames", "CSVWithNames"])
 def test_roundtrip_with_names(fmt):
-    payload = b"".join(fm.write_all(fm.WRITERS[fmt](SCHEMA), ROWS))
+    payload = b"".join(fm.write_all(fm.WRITERS[fmt](SCHEMA), _batches(ROWS)))
     first_line = payload.split(b"\n", 1)[0].decode()
     assert "id" in first_line and "name" in first_line
     back = list(fm.READERS[fmt](SCHEMA).read(payload))
@@ -38,7 +44,7 @@ def test_roundtrip_with_names(fmt):
 
 def test_with_names_and_types_header():
     payload = b"".join(
-        fm.write_all(fm.WRITERS["TabSeparatedWithNamesAndTypes"](SCHEMA), ROWS[:1])
+        fm.write_all(fm.WRITERS["TabSeparatedWithNamesAndTypes"](SCHEMA), _batches(ROWS[:1]))
     )
     lines = payload.decode().splitlines()
     assert lines[0] == "id\tname\tv\tok"
@@ -47,7 +53,7 @@ def test_with_names_and_types_header():
 
 def test_tsv_escapes_embedded_tabs():
     rows = [(1, "a\tb\nc", 0.0, True)]
-    payload = b"".join(fm.write_all(fm.WRITERS["TabSeparated"](SCHEMA), rows))
+    payload = b"".join(fm.write_all(fm.WRITERS["TabSeparated"](SCHEMA), _batches(rows)))
     assert payload == b"1\ta\\tb\\nc\t0.0\t1\n"
 
 
@@ -78,6 +84,6 @@ _row = st.tuples(
 @given(rows=st.lists(_row, min_size=1, max_size=5))
 @pytest.mark.parametrize("fmt", ["TabSeparated", "TabSeparatedWithNames", "CSV", "CSVWithNames", "JSONEachRow"])
 def test_roundtrip_property(fmt, rows):
-    payload = b"".join(fm.write_all(fm.WRITERS[fmt](SCHEMA), rows))
+    payload = b"".join(fm.write_all(fm.WRITERS[fmt](SCHEMA), _batches(rows)))
     back = list(fm.READERS[fmt](SCHEMA).read(payload))
     assert back == rows

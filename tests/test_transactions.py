@@ -1284,13 +1284,17 @@ def test_inflight_batch_stream_survives_three_publishes(pgt, spark):
     spark.range(0, n, 1, 16).selectExpr("id", "CAST(0 AS DOUBLE) AS v").write.saveAsTable("vp_b")
     try:
         _schema, stream = engine.stream_batches("SELECT id, v FROM vp_b", batch_size=500)
-        rows = list(stream.next_batch(timeout=60))  # the scan is in flight
+
+        def rows_of(batch):  # a record batch's rows as tuples
+            return list(zip(*(c.to_pylist() for c in batch.columns)))
+
+        rows = rows_of(stream.next_batch(timeout=60))  # the scan is in flight
         for k in range(3):
             assert engine.execute("UPDATE vp_b SET v = v + 1") == f"UPDATE {n}"
             while len(rows) < 20_000 * (k + 1):
-                rows.extend(stream.next_batch(timeout=60))
+                rows.extend(rows_of(stream.next_batch(timeout=60)))
         while (batch := stream.next_batch(timeout=60)) is not None:
-            rows.extend(batch)
+            rows.extend(rows_of(batch))
         assert len(rows) == n and len({r[0] for r in rows}) == n
         assert {r[1] for r in rows} == {0.0}
         assert engine.query(

@@ -1,8 +1,10 @@
 """Result transfer (engine/transfer.py): every PG and CH result leaves
-Spark through _BatchStream's partition reader. It must not stall per
-partition, must reach EOF on empty results, must relay a later
-partition's error with its SQLSTATE, and must close its socket when a
-stream is cancelled or abandoned."""
+Spark as Arrow record batches through _BatchStream's partition reader.
+It must not stall per partition, must reach EOF on empty results, must
+relay a later partition's error with its SQLSTATE, must close its
+socket when a stream is cancelled or abandoned, must hand out bounded
+slices through a bounded queue, and must refuse a result type Arrow
+cannot carry before any row description goes out."""
 
 from __future__ import annotations
 
@@ -10,32 +12,54 @@ import os
 import socket
 import threading
 import time
+import urllib.error
+import urllib.parse
+import urllib.request
 
 import pytest
 
 from duck_server_spark.engine.executor import Engine, _BatchStream
+from duck_server_spark.server.ch.http_server import serve
 from duck_server_spark.server.pg.wire_server import run_threaded
 from tests.pg_client import PgClient
+
+
+def _rows(batch) -> list[tuple]:
+    """A record batch's rows as tuples."""
+    return list(zip(*(c.to_pylist() for c in batch.columns)))
 
 
 def _drain(spark, df, batch_size: int = 1000) -> list[tuple]:
     stream = _BatchStream(spark, df, "transfer test", None, batch_size)
     rows: list[tuple] = []
     while (batch := stream.next_batch(timeout=60)) is not None:
-        rows.extend(batch)
+        rows.extend(_rows(batch))
     return rows
 
 
-@pytest.fixture(scope="module")
-def pg(spark):
+def _free_port() -> int:
     s = socket.socket()
     s.bind(("127.0.0.1", 0))
     port = s.getsockname()[1]
     s.close()
+    return port
+
+
+@pytest.fixture(scope="module")
+def pg(spark):
+    port = _free_port()
     server, _loop = run_threaded(Engine(spark), port=port)
     time.sleep(0.5)
     yield "127.0.0.1", port
     server.close()
+
+
+@pytest.fixture(scope="module")
+def ch(spark):
+    port = _free_port()
+    server = serve(Engine(spark), port=port)
+    yield f"http://127.0.0.1:{port}"
+    server.shutdown()
 
 
 def test_partitions_stream_without_a_per_partition_stall(spark):
@@ -146,3 +170,83 @@ def test_cancelled_and_abandoned_streams_close_their_sockets(pg, spark):
     while (leaked := _result_sockets(spark) - before) and time.monotonic() < deadline:
         time.sleep(0.2)
     assert not leaked
+
+
+def test_single_partition_streams_in_bounded_slices(spark):
+    """25k rows in one partition arrive in Spark batches of up to 10k
+    rows; the consumer gets them in order, in slices of at most
+    batch_size rows, and the queue never holds more than _QUEUE_DEPTH
+    items even when the consumer stalls."""
+    stream = _BatchStream(spark, spark.range(0, 25_000, 1, 1), "transfer test", None, 3000)
+    sizes, ids, depth = [], [], 0
+    while True:
+        depth = max(depth, stream._queue.qsize())
+        batch = stream.next_batch(timeout=60)
+        if batch is None:
+            break
+        if not sizes:
+            time.sleep(0.5)  # a stalled consumer: the producer fills the queue
+        sizes.append(len(batch))
+        ids.extend(batch.column(0).to_pylist())
+    assert ids == list(range(25_000))
+    assert max(sizes) <= 3000 and min(sizes) > 0
+    assert 1 <= depth <= _BatchStream._QUEUE_DEPTH
+
+
+def test_max_rows_portal_resumes_across_batch_boundaries(pg):
+    """Execute with maxRows=3 over 2500 rows that stream as 1000-row
+    batches: Executes that straddle a batch (rows 999-1001, 1998-2000)
+    resume where the last one stopped; every row arrives once, in
+    order."""
+    c = PgClient(*pg)
+    c.parse("s", "SELECT id FROM range(0, 2500, 1, 1)")
+    c.bind("p", "s", [])
+    got, status = [], "suspended"
+    while status == "suspended":
+        c.execute("p", max_rows=3)
+        rows, status = c.collect_execute()
+        assert len(rows) == 3 or status != "suspended"
+        got += rows
+    c.sync_collect()
+    assert [int(r[0]) for r in got] == list(range(2500))
+    c.terminate()
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/self/net/tcp"), reason="needs procfs")
+def test_stream_closed_mid_result_closes_its_socket(spark):
+    """A stream closed after its first batch, with 7 partitions still
+    to come, leaves no socket open."""
+    before = _result_sockets(spark)
+    for i in range(3):
+        df = spark.range(0, 200_000, 1, 8)
+        stream = _BatchStream(spark, df, "transfer test", f"close-test-{i}", 1000)
+        assert len(stream.next_batch(timeout=60)) == 1000
+        stream.close()
+    deadline = time.monotonic() + 15
+    while (leaked := _result_sockets(spark) - before) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert not leaked
+
+
+def test_year_month_interval_fails_before_row_description(pg):
+    """Arrow cannot carry a year-month interval: the statement fails
+    with 0A000 before any RowDescription, and the connection goes on."""
+    c = PgClient(*pg)
+    c._send(b"Q", b"SELECT INTERVAL '1' MONTH AS m\x00")
+    msgs = []
+    while (msg := c.recv_message())[0] != b"Z":
+        msgs.append(msg)
+    assert [t for t, _ in msgs] == [b"E"]
+    assert b"\x00C0A000\x00" in msgs[0][1]
+    assert b"YearMonthIntervalType" in msgs[0][1]
+    assert c.simple_query("SELECT 1 AS one")[1] == [("1",)]
+    c.terminate()
+
+
+def test_year_month_interval_is_a_ch_500(ch):
+    query = urllib.parse.urlencode({"query": "SELECT INTERVAL '1' MONTH AS m"})
+    url = f"{ch}/?{query}"
+    with pytest.raises(urllib.error.HTTPError) as err:
+        urllib.request.urlopen(url, timeout=120)
+    assert err.value.code == 500
+    assert "YearMonthIntervalType" in err.value.read().decode()
