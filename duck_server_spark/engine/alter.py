@@ -100,13 +100,7 @@ _DROP_INDEX = re.compile(
     re.IGNORECASE,
 )
 
-_ALT_SEQ = [0]
 ALTER_STAGING_MARK = "__alter_staging_"
-
-
-def _staging_name(table: str) -> str:
-    _ALT_SEQ[0] += 1
-    return f"{table}{ALTER_STAGING_MARK}{os.getpid()}_{_ALT_SEQ[0]}"
 
 
 def intercept(engine, q: str) -> str | None:
@@ -171,69 +165,57 @@ def _require_column(engine, table: str, col: str) -> str:
 
 
 def _swap_in(engine, table: str, transform) -> None:
-    """Schema-changing rewrite: stage the transformed table, then swap
-    under the commit mutex (DROP base + RENAME staging — Spark's catalog
-    moves the managed location on rename). The heavy work (the full
-    rewrite) runs OUTSIDE the mutex; the swap is two metadata ops.
-
-    Optimistic concurrency (ADVICE r7): the rewrite is staged from a
-    snapshot, so a concurrent append/COW publish/COMMIT landing between
-    staging and the swap would be silently wiped by an unconditional
-    swap. Same contract as executor._overwrite_table: refresh →
-    fingerprint → stage, then re-check the fingerprint INSIDE the mutex
-    and only swap if the base is unchanged; on mismatch drop the staging
-    and re-run the rewrite on the fresh base, 40001 after bounded
-    retries. The DROP→RENAME metadata pair runs under the EXCLUSIVE
-    visibility gate (round-8 review): a concurrent SELECT cannot analyze
-    between the two ops, so the TABLE_OR_VIEW_NOT_FOUND reader window is
-    closed for every gated read path — the same mechanism the commit
-    sweep uses, held for two metadata ops (milliseconds). Crash-
-    recoverable via recover_staging_dirs."""
-    from duck_server_spark.engine.errors import PgError
+    """Schema-changing rewrite through the write gate
+    (transactions.publish_gated): stage the transformed fresh base, then
+    — if no concurrent publish landed since the base was fingerprinted —
+    swap it in under the commit mutex (DROP base + RENAME staging;
+    Spark's catalog moves the managed location on rename). The heavy
+    work (the full rewrite) runs OUTSIDE the mutex; the swap is two
+    metadata ops, held under the EXCLUSIVE visibility gate (round-8
+    review) so a concurrent SELECT cannot analyze between them — the
+    same mechanism the commit sweep uses. Crash-recoverable via
+    recover_staging_dirs."""
     from duck_server_spark.engine.transactions import (
-        _COMMIT_MUTEX,
         VISIBILITY_GATE,
-        _table_fingerprint,
+        publish_gated,
+        staging_name,
         table_dir,
     )
 
     spark = engine.spark
-    for _attempt in range(3):
-        staging = _staging_name(table)
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        shutil.rmtree(table_dir(spark, staging), ignore_errors=True)
-        spark.catalog.refreshTable(table)
-        fp = _table_fingerprint(spark, table)
+    staging = staging_name(table, ALTER_STAGING_MARK)
+
+    def stage(fresh):
         # column DEFAULT metadata does not ride saveAsTable — capture it
         # so surviving columns keep their defaults for future inserts
         # (round 12, found by tools/statement_probe.py)
         defaults = {
             f.name: f.metadata["CURRENT_DEFAULT"]
-            for f in spark.table(table).schema.fields
+            for f in fresh.schema.fields
             if "CURRENT_DEFAULT" in f.metadata
         }
-        transform(spark.table(table)).write.saveAsTable(staging)
-        with _COMMIT_MUTEX:
-            if _table_fingerprint(spark, table) == fp:
-                with VISIBILITY_GATE.writing():
-                    spark.sql(f"DROP TABLE {table}")
-                    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-                for c in spark.table(table).schema.fieldNames():
-                    if c in defaults:
-                        spark.sql(
-                            f"ALTER TABLE {table} ALTER COLUMN `{c}` "
-                            f"SET DEFAULT {defaults[c]}"
-                        )
-                return
-        # concurrent publish landed between staging and the swap:
-        # discard the stale staging, re-run the rewrite on the fresh base
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        shutil.rmtree(table_dir(spark, staging), ignore_errors=True)
-    raise PgError(
-        "40001",
-        f'could not serialize access: table "{table}" was modified by '
-        "a concurrent transaction (retry the statement)",
-    )
+        transform(fresh).write.saveAsTable(staging)
+        return defaults
+
+    def publish(defaults):
+        with VISIBILITY_GATE.writing():
+            spark.sql(f"DROP TABLE {table}")
+            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+        for c in spark.table(table).schema.fieldNames():
+            if c in defaults:
+                spark.sql(f"ALTER TABLE {table} ALTER COLUMN `{c}` SET DEFAULT {defaults[c]}")
+
+    def discard(_defaults):
+        # with the base dropped and the rename not done, the staging
+        # holds the only copy: leave it to recover_staging_dirs
+        if spark.catalog.tableExists(table):
+            spark.sql(f"DROP TABLE IF EXISTS {staging}")
+            shutil.rmtree(table_dir(spark, staging), ignore_errors=True)
+
+    # a crashed earlier process with this pid can have left an
+    # orphaned staging directory that saveAsTable refuses
+    shutil.rmtree(table_dir(spark, staging), ignore_errors=True)
+    publish_gated(spark, table, stage, publish, discard)
 
 
 def _rename_table(engine, table: str, new: str) -> str:

@@ -580,31 +580,37 @@ def check_row_constraints(disp: str, rows: DataFrame, constraints: list[dict]) -
 def validate_append(
     spark: SparkSession,
     table: str,
-    incoming: DataFrame,
+    rows: DataFrame,
     constraints: list[dict],
     store: "ConstraintStore | None" = None,
+    replace: bool = False,
 ) -> None:
-    """Raise PgError 23505/23502/23503/23514 if appending `incoming` to
-    `table` would violate any declared constraint. Runs BEFORE the
-    append; all checks early-exit via limit(1)."""
+    """Raise PgError 23505/23502/23503/23514 if writing `rows` to `table`
+    would violate any declared constraint. By default `rows` are
+    appended, so their keys are also probed against the existing table;
+    with ``replace`` they are the table's whole post-rewrite contents
+    (a copy-on-write UPDATE's staged result — ``SET pk = const`` can
+    mint duplicates append-time validation never sees), so there is no
+    base to probe. Runs BEFORE the write; all checks early-exit via
+    limit(1)."""
     disp = _display_name(table)
-    check_row_constraints(disp, incoming, constraints)
+    check_row_constraints(disp, rows, constraints)
     for c in constraints:
         keys = c["cols"]
         kind = c["kind"]
         if kind in ("notnull", "check", "seq_default"):
             continue  # row-level / fill-time concerns, not key checks
         if kind == "foreign":
-            _check_fk(spark, disp, incoming, c, store, table=table)
+            _check_fk(spark, disp, rows, c, store, table=table)
             continue
         cname = f"{disp}_{'pkey' if kind == 'primary' else '_'.join(keys) + '_key'}"
-        nonnull = incoming
+        nonnull = rows
         if kind == "primary":
             null_pred = None
             for k in keys:
                 p = F.col(k).isNull()
                 null_pred = p if null_pred is None else (null_pred | p)
-            if incoming.filter(null_pred).limit(1).count() > 0:
+            if rows.filter(null_pred).limit(1).count() > 0:
                 raise PgError(
                     "23502",
                     f'null value in column of primary key "{cname}" of relation "{disp}"',
@@ -612,65 +618,43 @@ def validate_append(
         else:
             for k in keys:
                 nonnull = nonnull.filter(F.col(k).isNotNull())
-        # intra-batch duplicates (partial-aggregated group-by on the batch)
-        dup = nonnull.groupBy(*keys).count().filter(F.col("count") > 1).limit(1)
-        if dup.count() > 0:
-            raise PgError(
-                "23505", f'duplicate key value violates unique constraint "{cname}"'
-            )
-        # vs the existing table: column-pruned key scan, semi join
-        existing = spark.table(table).select(*keys)
-        hit = nonnull.select(*keys).join(existing, on=keys, how="left_semi").limit(1)
-        if hit.count() > 0:
-            raise PgError(
-                "23505", f'duplicate key value violates unique constraint "{cname}"'
-            )
-
-
-def validate_table_keys(
-    table: str,
-    staged: DataFrame,
-    constraints: list[dict],
-    spark: SparkSession | None = None,
-    store: "ConstraintStore | None" = None,
-) -> None:
-    """Raise PgError 23505/23502/23503 if the full (post-rewrite) contents
-    in `staged` violate any declared key — the UPDATE-path check: an
-    ``UPDATE t SET pk = const`` can mint duplicates (or orphan FK values)
-    that append-time validation never sees. Same early-exit limit(1)
-    probes as validate_append, run on the staged rewrite BEFORE it
-    replaces the base table."""
-    disp = _display_name(table)
-    check_row_constraints(disp, staged, constraints)
-    for c in constraints:
-        keys = c["cols"]
-        kind = c["kind"]
-        if kind in ("notnull", "check", "seq_default"):
-            continue  # row-level / fill-time concerns, not key checks
-        if kind == "foreign":
-            if spark is not None:
-                _check_fk(spark, disp, staged, c, store, table=table)
-            continue
-        cname = f"{disp}_{'pkey' if kind == 'primary' else '_'.join(keys) + '_key'}"
-        nonnull = staged
-        if kind == "primary":
-            null_pred = None
-            for k in keys:
-                p = F.col(k).isNull()
-                null_pred = p if null_pred is None else (null_pred | p)
-            if staged.filter(null_pred).limit(1).count() > 0:
+        # duplicates within `rows` (partial-aggregated group-by)
+        probes = [nonnull.groupBy(*keys).count().filter(F.col("count") > 1)]
+        if not replace:
+            # vs the existing table: column-pruned key scan, semi join
+            existing = spark.table(table).select(*keys)
+            probes.append(nonnull.select(*keys).join(existing, on=keys, how="left_semi"))
+        for hit in probes:
+            if hit.limit(1).count() > 0:
                 raise PgError(
-                    "23502",
-                    f'null value in column of primary key "{cname}" of relation "{disp}"',
+                    "23505", f'duplicate key value violates unique constraint "{cname}"'
                 )
-        else:
-            for k in keys:
-                nonnull = nonnull.filter(F.col(k).isNotNull())
-        dup = nonnull.groupBy(*keys).count().filter(F.col("count") > 1).limit(1)
-        if dup.count() > 0:
-            raise PgError(
-                "23505", f'duplicate key value violates unique constraint "{cname}"'
-            )
+
+
+def rekey_validator(spark: SparkSession, table: str, assigned: set, store: "ConstraintStore"):
+    """The check a copy-on-write UPDATE's staged rewrite needs before it
+    publishes, or None when it needs none: assigning a column of a
+    declared key can mint duplicates (validate_append with
+    ``replace``), and re-keying a REFERENCED parent can orphan its
+    children (validate_parent_rekey; DuckDB rejects it)."""
+    from duck_server_spark.engine.transactions import resolve_shadow
+
+    found = store.get(table)
+    refs = store.referencing(resolve_shadow(table) or table)
+    rekeys_own = bool(assigned & {k for c in found for k in c.get("cols", [])})
+    rekeys_parent = bool(
+        assigned & {k for _, fk in refs for k in _resolve_ref_cols(fk, store)}
+    )
+    if not (rekeys_own or rekeys_parent):
+        return None
+
+    def validate(staged: DataFrame) -> None:
+        if rekeys_own:
+            validate_append(spark, table, staged, found, store, replace=True)
+        if rekeys_parent:
+            validate_parent_rekey(spark, table, staged, refs, store)
+
+    return validate
 
 
 def validate_parent_rekey(

@@ -26,8 +26,8 @@ then a left join of the base against that aggregated match set, which
 AQE broadcasts when small. Both references to the stamped base live in
 one query plan over one file listing, so the row ids are consistent
 between the match pass and the rewrite pass. Publish rides
-Engine._overwrite_table (fingerprint-gated, commit-mutex, 40001 on
-concurrent modification).
+Engine._overwrite_table, which publishes through the write gate
+(transactions.publish_gated).
 """
 
 from __future__ import annotations
@@ -183,29 +183,7 @@ def run_update_from(engine, table: str, assigns, from_sql: str, where: str | Non
         return j.select(*out, F.coalesce("__dmlj_matches", F.lit(0)).alias("__dmlj_matches"))
 
     metric = F.sum(F.col("__dmlj_matches")).cast("long").alias("n")
-    from duck_server_spark.engine.transactions import resolve_shadow
-
-    found = engine.constraints.get(table)
-    key_cols = {c for cc in found for c in cc.get("cols", [])}
-    assigned = {c for c, _ in assigns}
-    # re-keying a referenced parent orphans children (same probe as the
-    # plain-UPDATE path — review finding)
-    refs = engine.constraints.referencing(resolve_shadow(table) or table)
-    ref_key_cols = {
-        c for _, fk in refs for c in cst._resolve_ref_cols(fk, engine.constraints)
-    }
-    validate = None
-    if (found and key_cols & assigned) or (refs and ref_key_cols & assigned):
-        def validate(staged):  # noqa: ANN001
-            body = staged.drop("__dmlj_matches")
-            if found and key_cols & assigned:
-                cst.validate_table_keys(
-                    table, body, found, spark, engine.constraints
-                )
-            if refs and ref_key_cols & assigned:
-                cst.validate_parent_rekey(
-                    spark, table, body, refs, engine.constraints
-                )
+    validate = cst.rekey_validator(spark, table, {c for c, _ in assigns}, engine.constraints)
     return engine._overwrite_table(
         table,
         transform,

@@ -45,6 +45,7 @@ from duck_server_spark.engine import catalog
 from duck_server_spark.engine import constraints as cst
 from duck_server_spark.engine.errors import PgError
 from duck_server_spark.engine.session import release_staged, stage_frame
+from duck_server_spark.engine.transactions import staging_name
 from duck_server_spark.engine.transfer import arrow_schema, iter_batches
 from duck_server_spark.engine.types import duckdb_type_name
 from duck_server_spark.plans import rewrites
@@ -105,10 +106,6 @@ _ALTER_OR_INDEX = re.compile(
     r"^\s*(alter\s+table|create\s+(unique\s+)?index|drop\s+index)\b", re.IGNORECASE
 )
 
-# copy-on-write staging name uniquifier (concurrent COW writers on one
-# table must never share a staging name — see _overwrite_table)
-_COW_SEQ = [0]
-_COW_SEQ_LOCK = threading.Lock()
 _SUMMARIZE = re.compile(r"^\s*summarize\s+(.+?);?\s*$", re.IGNORECASE | re.DOTALL)
 _DESCRIBE_STMT = re.compile(
     r"^\s*desc(?:ribe)?\s+(?:table\s+)?(.+?);?\s*$", re.IGNORECASE | re.DOTALL
@@ -1960,8 +1957,6 @@ class Engine:
         r"\b(read_csv_auto|read_csv|read_json_auto|read_json)\s*\(",
         re.IGNORECASE,
     )
-    _FILE_VIEW_SEQ = [0]
-
     def _expand_file_reads(self, q: str, dialect: str) -> str:
         """duck's read_csv/read_json table functions with OPTIONS and
         header/type sniffing (round 13). The pure-text tier maps the
@@ -2145,9 +2140,7 @@ class Engine:
                 _sval(x) for x in rewrites._split_top_level(inner, inner)
             ]
             df = df.toDF(*(names + df.columns[len(names) :]))
-        with _COW_SEQ_LOCK:
-            self._FILE_VIEW_SEQ[0] += 1
-            name = f"__duck_file_{os.getpid()}_{self._FILE_VIEW_SEQ[0]}"
+        name = staging_name("", "__duck_file_")
         df.createOrReplaceTempView(name)
         self._file_views[key] = name
         while len(self._file_views) > 256:
@@ -3387,9 +3380,7 @@ class Engine:
                 from duck_server_spark.engine.transactions import table_dir
 
                 base_name = mi.group("tbl").strip('`"')
-                with _COW_SEQ_LOCK:
-                    _COW_SEQ[0] += 1
-                    stg = f"{base_name}__ins_staging_{os.getpid()}_{_COW_SEQ[0]}"
+                stg = staging_name(base_name, "__ins_staging_")
                 self.spark.sql(f"DROP TABLE IF EXISTS {stg}")
                 shutil.rmtree(table_dir(self.spark, stg), ignore_errors=True)
                 # SOURCE analyzed under the shared visibility gate, then
@@ -3909,32 +3900,9 @@ class Engine:
             if _PRED_SUBQUERY.search(rewrites._mask_literals(pred))
             else None
         )
-        # UPDATE can mint duplicate keys (SET pk = const) that append-time
-        # validation never sees: if an assigned column is part of any
-        # declared key, validate the staged rewrite before it publishes.
-        # Re-keying a REFERENCED parent can also orphan children (DuckDB
-        # rejects it — review finding): probe children vs the staged keys.
-        from duck_server_spark.engine.transactions import resolve_shadow
-
-        found = self.constraints.get(table)
-        key_cols = {c for cc in found for c in cc["cols"]}
-        refs = self.constraints.referencing(resolve_shadow(table) or table)
-        ref_key_cols = {
-            c
-            for _, fk in refs
-            for c in cst._resolve_ref_cols(fk, self.constraints)
-        }
-        validate = None
-        if (found and key_cols & set(assigns)) or (refs and ref_key_cols & set(assigns)):
-            def validate(staged):  # noqa: ANN001
-                if found and key_cols & set(assigns):
-                    cst.validate_table_keys(
-                        table, staged, found, spark, self.constraints
-                    )
-                if refs and ref_key_cols & set(assigns):
-                    cst.validate_parent_rekey(
-                        spark, table, staged, refs, self.constraints
-                    )
+        # UPDATE can mint duplicate keys (SET pk = const) or orphan the
+        # children of a re-keyed parent: validate the staged rewrite
+        validate = cst.rekey_validator(spark, table, set(assigns), self.constraints)
         capture = None
         publish_cols = None
         if returning:
@@ -4040,20 +4008,21 @@ class Engine:
         capture=None,
         count_fallback=None,
     ) -> int:
-        """Stage-then-swap rewrite, never through the driver:
+        """Stage-then-swap rewrite through the write gate
+        (transactions.publish_gated), never through the driver:
 
-        1. transform(source) → staging table: the ONLY pass that computes
-           the rewrite, executor-parallel; ``metric`` (the affected-row
-           count) is observed during this same job — no separate count().
-        2. target overwritten by re-reading the staged parquet (a plain
-           file copy, no recompute), staging dropped.
+        1. stage: transform(fresh base) → a uniquely named staging
+           table, the ONLY pass that computes the rewrite; ``metric``
+           (the affected-row count) is observed during this same job —
+           no separate count(). ``validate`` checks the staged contents,
+           ``capture`` (DML RETURNING) materializes the affected rows.
+        2. publish, if no concurrent publish landed since the base was
+           fingerprinted: pointer swap — the staged files become a fresh
+           version dir and the catalog entry re-points; readers that
+           listed the old files keep them until the grace sweep.
 
-        Durability: the original is untouched until step 2 begins, and
-        staging holds the complete new contents throughout step 2 — a
-        crash leaves recoverable state at every point, though the final
-        overwrite itself is not atomic (vanilla parquet tables have no
-        commit protocol; Delta/Iceberg's atomic swap is the production
-        answer — documented non-goal, ADVICE r1).
+        The base is untouched until step 2, and a failure anywhere drops
+        the staging (and the RETURNING capture): nothing is left behind.
         (Not DROP+RENAME: Spark's in-memory catalog renames a managed
         table without moving its location, which orphans the staging
         path for the next rewrite.)"""
@@ -4061,157 +4030,83 @@ class Engine:
 
         import shutil
 
-        from duck_server_spark.engine.errors import PgError
         from duck_server_spark.engine.transactions import (
-            _COMMIT_MUTEX,
-            _table_fingerprint,
-            is_file_race,
+            publish_gated,
+            publish_pointer_swap,
+            resolve_shadow,
             table_dir,
         )
 
-        # UNIQUE staging name per invocation (r7 review round 3): two
-        # concurrent COW writers on the same table sharing one staging
-        # name could drop/overwrite each other's staged result between
-        # the fingerprint check and the publish — the fingerprint gate
-        # cannot see that. Crash leftovers under any *__cow_staging*
-        # name are swept by the bootstrap janitor.
-        with _COW_SEQ_LOCK:
-            _COW_SEQ[0] += 1
-            staging = f"{table}__cow_staging_{os.getpid()}_{_COW_SEQ[0]}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        if not self.spark.catalog.tableExists(staging):
-            # a crashed prior rewrite (or a fresh session over an old
-            # warehouse) can leave an orphaned staging directory that no
-            # catalog entry owns — saveAsTable refuses the location then
-            shutil.rmtree(table_dir(self.spark, staging), ignore_errors=True)
-        # Optimistic concurrency (round-7 soak finding): an autocommit
-        # UPDATE/DELETE is a one-statement transaction, so it must not
-        # silently wipe a COMMIT that published between our read and our
-        # publish — fingerprint the base before staging, publish only if
-        # it is unchanged (under the same commit mutex transactions use),
-        # else re-run the rewrite on the fresh base. Bounded retries,
-        # then 40001 like any other serialization loser.
-        #
-        # The scan is REBUILT from spark.table(table) after a refresh on
-        # every attempt — the caller's `source` DataFrame pins the file
-        # listing from its own analysis time, so a row appended between
-        # that analysis and our fingerprint read would be invisible to
-        # the rewrite yet PASS the fingerprint compare: a silently
-        # deleted append (found by test_autocommit_insert_vs_update_no_
-        # lost_rows). refresh → fingerprint → resolve: a file landing
-        # inside this window can only make the publish-time compare FAIL
-        # (conservative retry), never a stale read pass it.
+        staging = staging_name(table, "__cow_staging_")
+        pub = f"{staging}_pub"
         # alias the scan under the table's simple BASE name (a txn shadow
         # resolves back): user predicates with qualified refs (`UPDATE t
         # … WHERE t.id = 1`) must keep resolving after the shadow
         # redirect renames the relation (round 7; found by the in-txn
         # join-DML test, applies to every COW caller)
-        from duck_server_spark.engine.transactions import resolve_shadow
-
         base_alias = (resolve_shadow(table) or table).split(".")[-1].strip('`"')
-        for _attempt in range(3):
+
+        def stage(fresh):
+            fresh = fresh.alias(base_alias)
             obs = Observation()
-            self.spark.catalog.refreshTable(table)
-            fp = _table_fingerprint(self.spark, table)
-            fresh = self.spark.table(table).alias(base_alias)
-            try:
-                # observe_output: the metric aggregates the TRANSFORM's
-                # rows (e.g. the upsert's action marker), not the base's
-                # count_fallback (round 12): an IN/EXISTS-subquery
-                # predicate can't live inside CollectMetrics — skip the
-                # observation and count via a standalone job instead
-                if count_fallback is not None:
-                    staged_df = transform(fresh)
-                else:
-                    staged_df = (
-                        transform(fresh).observe(obs, metric)
-                        if observe_output
-                        else transform(fresh.observe(obs, metric))
-                    )
-                staged_df.write.mode("overwrite").saveAsTable(staging)
-            except Exception as e:  # noqa: BLE001
-                # a concurrent publish can swap the base's files under our
-                # scan (the file-level window) — that exact transient
-                # retries; anything else is a real error. Clean any
-                # partial staging the failed write left (location without
-                # catalog entry → 42710 on retry).
-                if _attempt < 2 and is_file_race(e):
-                    self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-                    shutil.rmtree(table_dir(self.spark, staging), ignore_errors=True)
-                    self.spark.catalog.refreshTable(table)
-                    continue
-                raise
+            # observe_output: the metric aggregates the TRANSFORM's rows
+            # (e.g. the upsert's action marker), not the base's.
+            # count_fallback (round 12): an IN/EXISTS-subquery predicate
+            # can't live inside CollectMetrics — skip the observation and
+            # count via a standalone job instead
+            if count_fallback is not None:
+                staged_df = transform(fresh)
+            elif observe_output:
+                staged_df = transform(fresh).observe(obs, metric)
+            else:
+                staged_df = transform(fresh.observe(obs, metric))
+            staged_df.write.mode("overwrite").saveAsTable(staging)
             n = (
                 int(count_fallback(fresh))
                 if count_fallback is not None
                 else int(obs.get["n"] or 0)
             )
             if validate is not None:
-                try:
-                    validate(self.spark.table(staging))
-                except Exception:
-                    self.spark.sql(f"DROP TABLE {staging}")
-                    raise  # base table untouched
-            captured = None
-            if capture is not None:
-                # DML RETURNING (round 7): capture(fresh base, staged
-                # result) → the affected-row set, materialized by an
-                # eager checkpoint BEFORE the publish drops the staging
-                # files (and before a DELETE's publish removes the very
-                # base rows being returned). The caller's result stream
-                # releases it; a failed publish or a fingerprint-mismatch
-                # retry releases it here.
-                captured = stage_frame(capture(fresh, self.spark.table(staging)))
-            try:
-                with _COMMIT_MUTEX:
-                    if _table_fingerprint(self.spark, table) == fp:
-                        from duck_server_spark.engine.transactions import (
-                            publish_pointer_swap,
-                        )
+                validate(self.spark.table(staging))
+            # DML RETURNING (round 7): capture(fresh base, staged result)
+            # → the affected-row set, materialized BEFORE the publish
+            # drops the staging files (and before a DELETE's publish
+            # removes the very base rows being returned); the caller's
+            # result stream releases it
+            captured = (
+                stage_frame(capture(fresh, self.spark.table(staging)))
+                if capture is not None
+                else None
+            )
+            return n, captured
 
-                        if publish_cols or publish_where:
-                            # projected/filtered publish (upsert marker
-                            # columns, DO NOTHING rows): materialize the
-                            # published shape into a second staging first so
-                            # the pointer swap stays a pure rename
-                            proj = (
-                                ", ".join(f"`{c}`" for c in publish_cols)
-                                if publish_cols
-                                else "*"
-                            )
-                            cond = f" WHERE {publish_where}" if publish_where else ""
-                            pub = f"{staging}_pub"
-                            self.spark.sql(f"DROP TABLE IF EXISTS {pub}")
-                            self.spark.sql(
-                                f"CREATE TABLE {pub} AS SELECT {proj} FROM {staging}{cond}"
-                            )
-                            self.spark.sql(f"DROP TABLE {staging}")
-                            staging_final = pub
-                        else:
-                            staging_final = staging
-                        # version-directory publish (round 9): pointer swap —
-                        # the staged files become a fresh version dir and the
-                        # catalog entry re-points; readers that listed the
-                        # old files keep them until the grace sweep, so an
-                        # in-flight client scan survives this publish.
-                        publish_pointer_swap(self.spark, table, staging_final)
-                        kept, captured = captured, None  # the caller's stream releases it
-                        return (n, kept) if capture is not None else n
-            finally:
-                if captured is not None:
-                    release_staged(self.spark, captured)
-            # fingerprint mismatch: a concurrent publish/append landed.
-            # refreshTable before retrying (r7 review) — the re-staged
-            # rewrite must list the FRESH files, not a cached listing,
-            # or the retry could pass the compare yet miss the
-            # concurrently written rows
-            self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-            self.spark.catalog.refreshTable(table)
-        raise PgError(
-            "40001",
-            f'could not serialize access: table "{table}" was modified by '
-            "a concurrent transaction (retry the statement)",
-        )
+        def publish(staged):
+            n, captured = staged
+            final = staging
+            if publish_cols or publish_where:
+                # projected/filtered publish (upsert marker columns, DO
+                # NOTHING rows): materialize the published shape into a
+                # second staging first so the pointer swap stays a pure
+                # rename
+                proj = ", ".join(f"`{c}`" for c in publish_cols) if publish_cols else "*"
+                cond = f" WHERE {publish_where}" if publish_where else ""
+                self.spark.sql(f"CREATE TABLE {pub} AS SELECT {proj} FROM {staging}{cond}")
+                self.spark.sql(f"DROP TABLE {staging}")
+                final = pub
+            publish_pointer_swap(self.spark, table, final)
+            return (n, captured) if capture is not None else n
+
+        def discard(staged):
+            for name in (staging, pub):
+                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+                shutil.rmtree(table_dir(self.spark, name), ignore_errors=True)
+            if staged is not None and staged[1] is not None:
+                release_staged(self.spark, staged[1])
+
+        # a crashed earlier process with this pid can have left an
+        # orphaned staging directory that saveAsTable refuses
+        shutil.rmtree(table_dir(self.spark, staging), ignore_errors=True)
+        return publish_gated(self.spark, table, stage, publish, discard)
 
     # ------------------------------------------------------------ cancel
 

@@ -39,12 +39,13 @@ the session layer with staged writes:
   shadows forward), so a crash between two table publishes recovers to
   a consistent state instead of a half-applied commit.
 - ROLLBACK just drops the shadows; the base tables were never written.
-- Autocommit UPDATE/DELETE (the engine's copy-on-write rewrites) join
-  the same contract (round 7): they fingerprint the base before staging
-  and publish only if unchanged, under the same commit mutex, retrying
-  the rewrite on a fresh base and erroring 40001 only after bounded
-  retries — so a one-statement transaction can never silently wipe a
-  concurrent COMMIT.
+- Every validated single-statement write (copy-on-write UPDATE/DELETE,
+  upserts, validated appends, ALTER rewrites) joins the same contract
+  through one gate, ``publish_gated``: fingerprint the base before
+  staging, publish only if unchanged under the same commit mutex,
+  retry on a fresh base and error 40001 only after bounded retries —
+  so a one-statement transaction can never silently wipe a concurrent
+  COMMIT.
 
 Concurrency (rounds 7-9, closed in three layers): catalog-level —
 publishes keep the table's catalog entry continuously visible (the
@@ -73,6 +74,7 @@ same client-visible semantics on plain parquet.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
 import os
 import re
@@ -703,42 +705,89 @@ def _table_fingerprint(spark, table: str):
     return tuple(sorted(entries))
 
 
-def gated_append(spark, table: str, df, validate=None) -> None:
-    """Validate-then-append WITHOUT the validate/append TOCTOU (ADVICE
-    r7): key validation reads the base, so a concurrent insert of the
-    same key landing between the validation and the mutex-ed append
-    would slip a PK/UNIQUE duplicate past the check — the commit mutex
-    alone only prevents overwrite races, not key races. Contract
-    mirrors the COW paths: fingerprint before validating, re-check
-    under _COMMIT_MUTEX, re-validate against the fresh base on
-    mismatch, 40001 after bounded retries. With no validator the gate
-    is skipped — plain appends are commutative, so only the
-    overwrite-race mutex is needed.
+_STAGING_SEQ = itertools.count(1)
 
-    Cost note (review): the fingerprint is two os.walk sweeps of the
-    table directory per VALIDATED batch — metadata-only, but linear in
-    the file count, so a constrained table ingesting many micro-batches
-    pays it per flush. That is the price of key-correctness on vanilla
-    parquet; at production scale a table format's optimistic commit
-    (Delta/Iceberg) replaces both the walk and the mutex — the
-    documented non-goal. Unconstrained ingest (the common bulk path)
-    skips it entirely."""
+
+def staging_name(table: str, mark: str) -> str:
+    """A process-unique relation name `<table><mark><pid>_<n>`: two
+    concurrent writers on one table never share a staging relation.
+    Crash leftovers are swept by the bootstrap janitor by `mark`."""
+    return f"{table}{mark}{os.getpid()}_{next(_STAGING_SEQ)}"
+
+
+def serialization_failure(table: str, unit: str = "statement") -> PgError:
+    """40001: a concurrent publish to `table` beat this write's."""
+    return PgError(
+        "40001",
+        f'could not serialize access: table "{table}" was modified by '
+        f"a concurrent transaction (retry the {unit})",
+    )
+
+
+def publish_gated(spark, table: str, stage, publish, discard):
+    """The optimistic write gate every validated single-statement write
+    publishes through (COW UPDATE/DELETE, upserts, validated appends,
+    ALTER rewrites): a write that read the base must not publish over a
+    concurrent publish it did not see — DuckDB's optimistic MVCC errors
+    the losing writer the same way.
+
+    Per attempt: refreshTable, fingerprint the base, then
+    ``stage(fresh)`` on a frame resolved after the fingerprint (so a
+    file landing in between can only fail the compare, never slip past
+    it). Under _COMMIT_MUTEX, ``publish(staged)`` only if the
+    fingerprint is unchanged; otherwise ``discard(staged)`` and retry on
+    the fresh base. A file race raised while staging (a concurrent
+    publish swapped the files under the staging scan) retries the same
+    way. ``discard`` runs on any exception once staging began — with
+    None when ``stage`` itself raised — so a failed write leaves no
+    staging behind. After three attempts: 40001. → publish's result.
+
+    Cost note: the fingerprint is two os.walk sweeps of the table
+    directory per write — metadata-only, but linear in the file count.
+    A table format's optimistic commit (Delta/Iceberg) replaces both
+    the walk and the mutex — the documented non-goal."""
+    for attempt in range(3):
+        spark.catalog.refreshTable(table)
+        fp = _table_fingerprint(spark, table)
+        try:
+            staged = stage(spark.table(table))
+        except BaseException as e:
+            discard(None)
+            if attempt < 2 and is_file_race(e):
+                continue
+            raise
+        try:
+            with _COMMIT_MUTEX:
+                if _table_fingerprint(spark, table) == fp:
+                    return publish(staged)
+        except BaseException:
+            discard(staged)
+            raise
+        discard(staged)
+    raise serialization_failure(table)
+
+
+def gated_append(spark, table: str, df, validate=None) -> None:
+    """Validate-then-append `df` through the write gate: key validation
+    reads the base, so a concurrent insert of the same key landing
+    between the validation and the append forces a re-validation
+    against the fresh base. With no validator only the commit mutex is
+    taken — plain appends commute."""
     if validate is None:
         with _COMMIT_MUTEX:
             df.write.mode("append").saveAsTable(table)
         return
-    for _attempt in range(3):
-        spark.catalog.refreshTable(table)
-        fp = _table_fingerprint(spark, table)
+
+    def stage(_fresh):
         validate(df)
-        with _COMMIT_MUTEX:
-            if _table_fingerprint(spark, table) == fp:
-                df.write.mode("append").saveAsTable(table)
-                return
-    raise PgError(
-        "40001",
-        f'could not serialize access: table "{table}" was modified by '
-        "a concurrent transaction (retry the statement)",
+        return df
+
+    publish_gated(
+        spark,
+        table,
+        stage,
+        lambda staged: staged.write.mode("append").saveAsTable(table),
+        lambda _staged: None,
     )
 
 
@@ -1086,11 +1135,7 @@ class TxnOverlay:
             for key, fp in self.base_versions.items():
                 if _table_fingerprint(spark, key) != fp:
                     self.rollback()
-                    raise PgError(
-                        "40001",
-                        f'could not serialize access: table "{key}" was modified '
-                        "by a concurrent transaction (retry the transaction)",
-                    )
+                    raise serialization_failure(key, "transaction")
             manifest = {
                 "txn_id": self.txn_id,
                 "publish": {

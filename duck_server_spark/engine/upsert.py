@@ -51,9 +51,8 @@ scan semi-joined with the broadcast source, so it is at most
 the rewrite + one key-column base scan for matched keys — the same
 shape Delta/Iceberg MERGE executes when the source fits in a broadcast,
 with AQE free to fall back to shuffle joins when it does not. The
-publish rides the engine's standard staged-overwrite path
-(fingerprint-gated, commit-mutex serialized, 40001 on concurrent
-modification).
+publish rides the engine's standard staged-overwrite path, which
+publishes through the write gate (transactions.publish_gated).
 """
 
 from __future__ import annotations
@@ -286,52 +285,38 @@ def _do_nothing(engine, up, staged_src: DataFrame, targets, all_cst) -> int:
     """Skip-conflicting-rows append: anti-join per key constraint (plain
     equality, so null-keyed rows pass through and insert), then the
     standard validated append — which re-raises 23505 for conflicts on
-    constraints OUTSIDE the target set, exactly like DuckDB does.
-
-    TOCTOU fix (ADVICE r7): the anti-join and validate_append read the
-    base BEFORE the mutex-ed append — a concurrent insert of the same
-    key landing in between would slip a duplicate past the very check
-    DO NOTHING exists to perform. Same contract as the COW paths:
-    fingerprint the base before the anti-join, re-check under
-    _COMMIT_MUTEX, and re-run the anti-join/validation on the fresh base
-    on mismatch (40001 after bounded retries)."""
+    constraints OUTSIDE the target set, exactly like DuckDB does. Runs
+    through the write gate (transactions.publish_gated): a concurrent
+    insert of the same key landing before the publish forces the
+    anti-join and validation to re-run on the fresh base."""
     spark = engine.spark
     from duck_server_spark.engine import constraints as cst
-    from duck_server_spark.engine.transactions import (
-        _COMMIT_MUTEX,
-        _table_fingerprint,
-    )
+    from duck_server_spark.engine.transactions import publish_gated
 
-    for _attempt in range(3):
-        spark.catalog.refreshTable(up.table)
-        fp = _table_fingerprint(spark, up.table)
+    def stage(fresh):
         new_rows = staged_src
         for c in targets:
             keys = list(c["cols"])
-            new_rows = new_rows.join(
-                spark.table(up.table).select(*keys), on=keys, how="left_anti"
-            )
+            new_rows = new_rows.join(fresh.select(*keys), on=keys, how="left_anti")
         # re-select in table column order (join(on=keys) reorders key cols first)
-        new_rows = new_rows.select(
-            *[f.name for f in spark.table(up.table).schema.fields]
-        )
-        staged = stage_frame(new_rows)
+        staged = stage_frame(new_rows.select(*fresh.columns))
         try:
-            cst.validate_append(
-                spark, up.table, staged, all_cst, engine.constraints
-            )
-            n = staged.count()
-            with _COMMIT_MUTEX:
-                if _table_fingerprint(spark, up.table) == fp:
-                    staged.write.mode("append").saveAsTable(up.table)
-                    return n
-        finally:
+            cst.validate_append(spark, up.table, staged, all_cst, engine.constraints)
+            return staged, staged.count()
+        except BaseException:
             release_staged(spark, staged)
-    raise PgError(
-        "40001",
-        f'could not serialize access: table "{up.table}" was modified by '
-        "a concurrent transaction (retry the statement)",
-    )
+            raise
+
+    def publish(staged):
+        staged[0].write.mode("append").saveAsTable(up.table)
+        release_staged(spark, staged[0])
+        return staged[1]
+
+    def discard(staged):
+        if staged is not None:
+            release_staged(spark, staged[0])
+
+    return publish_gated(spark, up.table, stage, publish, discard)
 
 
 def _do_update(engine, up, staged_src: DataFrame, target, all_cst, schema, base) -> int:
@@ -408,8 +393,8 @@ def _do_update(engine, up, staged_src: DataFrame, target, all_cst, schema, base)
         return updated.unionAll(inserted)
 
     metric = F.sum(F.col("__ups_action")).cast("long").alias("n")
-    validate = lambda staged: cst.validate_table_keys(  # noqa: E731
-        up.table, staged.drop("__ups_action"), all_cst, spark, engine.constraints
+    validate = lambda staged: cst.validate_append(  # noqa: E731
+        spark, up.table, staged, all_cst, engine.constraints, replace=True
     )
     return engine._overwrite_table(
         up.table,

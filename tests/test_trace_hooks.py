@@ -12,9 +12,9 @@ import sys
 
 import pytest
 
-from duck_server_spark.engine import executor
+from duck_server_spark.engine import executor, transactions
 from duck_server_spark.server.pg import wire_server
-from duck_server_spark.sources import formats
+from duck_server_spark.sources import formats, ingest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -31,6 +31,11 @@ HOOKS = [
     (executor._BatchStream, "__init__"),
     (executor._BatchStream, "next_batch"),
     (executor._BatchStream, "_produce"),
+    (transactions, "gated_append"),
+    (ingest.BatchAppender, "flush"),
+    (executor.Engine, "_copy_on_write_update"),
+    (executor.Engine, "_copy_on_write_delete"),
+    (executor.Engine, "_overwrite_table"),
 ]
 
 
@@ -44,6 +49,46 @@ def test_produce_takes_the_frame_first():
     is handed as _produce's first argument."""
     params = list(inspect.signature(executor._BatchStream._produce).parameters)
     assert params[:2] == ["self", "df"]
+
+
+def test_gated_append_keeps_the_traced_signature():
+    """spans.py replaces gated_append with a wrapper of this signature."""
+    params = list(inspect.signature(transactions.gated_append).parameters)
+    assert params == ["spark", "table", "df", "validate"]
+
+
+def test_validated_flush_goes_through_the_module_gated_append(spark, monkeypatch):
+    """A validated ingest flush looks gated_append up on the module at
+    call time and calls the validate it passes, so the ingest.append
+    and ingest.validate spans count every flush."""
+    import shutil
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    spark.sql("DROP TABLE IF EXISTS th_pk")
+    shutil.rmtree(f"{wh}/th_pk", ignore_errors=True)
+    engine = executor.Engine(spark)
+    engine.execute("CREATE TABLE th_pk (id INT PRIMARY KEY, v STRING)")
+    real = transactions.gated_append
+    seen = []
+
+    def traced(spark_, table, df, validate=None):
+        def counted(frame):
+            seen.append("validate")
+            return validate(frame)
+
+        seen.append(table)
+        return real(spark_, table, df, validate=counted if validate else None)
+
+    monkeypatch.setattr(transactions, "gated_append", traced)
+    try:
+        app = engine.appender("th_pk", None)
+        app.add((1, "a"))
+        app.flush()
+        assert seen == ["th_pk", "validate"]
+        assert [tuple(r) for r in spark.table("th_pk").collect()] == [(1, "a")]
+    finally:
+        engine.execute("DROP TABLE IF EXISTS th_pk")
+        shutil.rmtree(f"{wh}/th_pk", ignore_errors=True)
 
 
 def test_every_wrapper_installs():
