@@ -14,6 +14,12 @@ Scale notes (100 TB design intent):
 - Arrow enabled for the pandas paths (toPandas, pandas UDFs). Results
   reach the protocol edge as Arrow record batches, one partition at a
   time (engine/transfer.py), and are rendered a column at a time.
+- Python workers (UDFs, mapInPandas operators) start from
+  engine/pyworker.py, which keeps PySpark's per-task import-cache
+  invalidation from re-reading pyspark.zip's directory 16 times per
+  task on CPython 3.11 (~150 ms of a one-row task's ~250 ms, 4 vCPUs).
+  They get this package on their path whatever the caller's working
+  directory.
 """
 
 from __future__ import annotations
@@ -36,6 +42,9 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# the directory holding the duck_server_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def get_session(app_name: str = "duck_server_spark", cpus: int | None = None) -> SparkSession:
@@ -65,11 +74,20 @@ def get_session(app_name: str = "duck_server_spark", cpus: int | None = None) ->
         # on, TIME literals, CAST('..' AS TIME), and make_time() all
         # work natively (round 12)
         .config("spark.sql.timeType.enabled", "true")
-        # fixture files are single ~2-10 MB parquets; the 128 MB default
-        # gives 1-task scans. 4 MB splits the big tables across cores
-        # (row-group granularity). On a real cluster with TB inputs the
-        # default is right — this is the local[N] small-file knob.
+        # Every fixture parquet is one row group, and a row group is
+        # read by the one split holding its midpoint, so this does not
+        # spread a scan across cores: sf0.1 lineitem (10.8 MB) gets 3
+        # splits, 1 of them non-empty, and an unshuffled result pays a
+        # transfer job per split. It is kept because an A/B against
+        # 128 MB with minPartitionNum=1 was mixed (-7% on a bulk read,
+        # +33% on a lineitem count). On a real cluster with TB inputs
+        # the default is right.
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+        # Python workers: see engine/pyworker.py; the path lets them
+        # import this package (UDFs and operator functions are pickled
+        # by reference) from any working directory
+        .config("spark.python.daemon.module", "duck_server_spark.engine.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -220,7 +238,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     # DuckDB-named pandas-UDF scalars (damerau_levenshtein, jaro_*) —
     # registered here too so sessions we didn't build (the verification
     # driver constructs its own) can run the similarity gate rows;
-    # id()-guarded no-op after the first call
+    # a no-op after the first call on a session
     from duck_server_spark.functions.text_similarity import (
         register_text_similarity,
     )

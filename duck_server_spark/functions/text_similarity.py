@@ -123,9 +123,6 @@ def _jw(a: str, b: str) -> float:
     return j
 
 
-_REGISTERED: set[int] = set()
-
-
 def register_text_similarity(spark: SparkSession) -> None:
     """Register the pandas-UDF trio under their DuckDB names.
 
@@ -133,9 +130,13 @@ def register_text_similarity(spark: SparkSession) -> None:
     the decorator parses its return-type DDL through the active
     SparkContext, so a module-level definition would make a bare
     `import text_similarity` (the pytest pins import _dl/_jaro
-    directly) require a running JVM. Idempotent per session (the id()
-    guard makes register_views' per-query invocation free)."""
-    if id(spark) in _REGISTERED:
+    directly) require a running JVM. Idempotent per live session (the
+    session_store flag makes register_views' per-query invocation
+    free, and dies with the session)."""
+    from duck_server_spark.engine.session import session_store
+
+    store = session_store(spark)
+    if store.get("text_similarity_registered"):
         return
 
     @pandas_udf("bigint")
@@ -171,4 +172,4 @@ def register_text_similarity(spark: SparkSession) -> None:
     spark.udf.register("damerau_levenshtein", damerau_levenshtein_udf)
     spark.udf.register("jaro_similarity", jaro_similarity_udf)
     spark.udf.register("jaro_winkler_similarity", jaro_winkler_udf)
-    _REGISTERED.add(id(spark))
+    store["text_similarity_registered"] = True

@@ -76,3 +76,16 @@ def test_pg_server_concurrent_queries(spark, sf_dir):
     server.close()
     assert not errors
     assert results == {i: str(i * 100) for i in range(6)}
+
+
+def test_text_similarity_registers_on_each_live_session(spark):
+    """Registration is remembered per live session object, not per
+    id(): a second session over the same context has its own function
+    registry and gets the UDFs too."""
+    from duck_server_spark.functions.text_similarity import register_text_similarity
+
+    other = spark.newSession()
+    register_text_similarity(spark)
+    register_text_similarity(other)
+    q = "SELECT damerau_levenshtein('ca', 'abc') AS v"
+    assert spark.sql(q).first().v == other.sql(q).first().v == 2

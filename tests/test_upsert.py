@@ -399,41 +399,3 @@ def test_gated_append_revalidates_on_concurrent_same_key(spark):
     assert [r.id for r in spark.table("gap_t").orderBy("id").collect()] == [1, 2]
     spark.sql("DROP TABLE gap_t")
     shutil.rmtree(f"{wh}/gap_t", ignore_errors=True)
-
-
-def test_alter_swap_preserves_concurrent_append(spark):
-    """Round 8 (ADVICE r7): an append landing between an ALTER rewrite's
-    staging and its swap must NOT be silently wiped — the fingerprint
-    mismatch forces a re-stage that includes the appended row."""
-    import shutil
-
-    from duck_server_spark.engine import alter
-    from duck_server_spark.engine.executor import Engine
-
-    eng = Engine(spark)
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    spark.sql("DROP TABLE IF EXISTS asp_t")
-    shutil.rmtree(f"{wh}/asp_t", ignore_errors=True)
-    eng.execute("CREATE TABLE asp_t (id INT, v STRING)")
-    eng.execute("INSERT INTO asp_t VALUES (1,'a')")
-    calls = []
-
-    def transform(df):
-        out = df.withColumn("w", df.id + 100)
-        if not calls:
-            calls.append(1)
-            # concurrent append lands AFTER the rewrite snapshotted its
-            # input (and after the fingerprint was taken)
-            spark.createDataFrame([(2, "b")], "id INT, v STRING").write.mode(
-                "append"
-            ).saveAsTable("asp_t")
-            spark.catalog.refreshTable("asp_t")
-        return out
-
-    alter._swap_in(eng, "asp_t", transform)
-    rows = sorted((r.id, r.v, r.w) for r in spark.table("asp_t").collect())
-    # BOTH rows survive, both transformed — the round-7 code would have
-    # published the one-row staging and wiped the concurrent append
-    assert rows == [(1, "a", 101), (2, "b", 102)]
-    spark.sql("DROP TABLE asp_t")
-    shutil.rmtree(f"{wh}/asp_t", ignore_errors=True)
