@@ -399,3 +399,50 @@ def test_gated_append_revalidates_on_concurrent_same_key(spark):
     assert [r.id for r in spark.table("gap_t").orderBy("id").collect()] == [1, 2]
     spark.sql("DROP TABLE gap_t")
     shutil.rmtree(f"{wh}/gap_t", ignore_errors=True)
+
+
+def test_alter_swap_preserves_concurrent_append(spark):
+    """An append landing between an ALTER rewrite's staging write and its
+    swap must not be silently wiped: the publish-time fingerprint
+    mismatch discards the stage and re-stages with the appended row."""
+    import shutil
+
+    from duck_server_spark.engine import alter
+    from duck_server_spark.engine.executor import Engine
+
+    eng = Engine(spark)
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    spark.sql("DROP TABLE IF EXISTS asp_t")
+    shutil.rmtree(f"{wh}/asp_t", ignore_errors=True)
+    eng.execute("CREATE TABLE asp_t (id INT, v STRING)")
+    eng.execute("INSERT INTO asp_t VALUES (1,'a')")
+    calls = []
+
+    class AppendAfterStaging:
+        """Stands in for the transformed frame: writes the staging table,
+        then lets another writer append to the base before the swap."""
+
+        def __init__(self, df):
+            self.df = df
+            self.write = self
+
+        def saveAsTable(self, name):
+            self.df.write.saveAsTable(name)
+            spark.createDataFrame([(2, "b")], "id INT, v STRING").write.mode(
+                "append"
+            ).saveAsTable("asp_t")
+            spark.catalog.refreshTable("asp_t")
+
+    def transform(df):
+        out = df.withColumn("w", df.id + 100)
+        calls.append(1)
+        return AppendAfterStaging(out) if len(calls) == 1 else out
+
+    alter._swap_in(eng, "asp_t", transform)
+    rows = sorted((r.id, r.v, r.w) for r in spark.table("asp_t").collect())
+    # the first stage held one row; publishing it would have wiped the
+    # concurrent append, so a second attempt re-staged both rows
+    assert len(calls) == 2
+    assert rows == [(1, "a", 101), (2, "b", 102)]
+    spark.sql("DROP TABLE asp_t")
+    shutil.rmtree(f"{wh}/asp_t", ignore_errors=True)
