@@ -20,6 +20,12 @@ Scale notes (100 TB design intent):
   task on CPython 3.11 (~150 ms of a one-row task's ~250 ms, 4 vCPUs).
   They get this package on their path whatever the caller's working
   directory.
+- The server entrypoint (server/__main__.py) marks its --sf-dir startup
+  tables for Spark's in-memory columnar cache, lazily and MEMORY_ONLY:
+  the first statement on a table fills it, later ones read column
+  batches instead of decoding parquet, and a table too big for the heap
+  falls back to parquet scans. register_views itself caches nothing, so
+  the operators, bench.py and the plan audit keep their parquet scans.
 """
 
 from __future__ import annotations

@@ -526,7 +526,7 @@ def test_ch_rewrites_never_touch_string_literals(lit):
 @settings(max_examples=40, deadline=None)
 @given(
     s=st.text(
-        alphabet=st.sampled_from(list("ab'\;$-%_\n\t\"`) (")),
+        alphabet=st.sampled_from(list("ab'\\;$-%_\n\t\"`) (")),
         min_size=0,
         max_size=24,
     )

@@ -1,11 +1,15 @@
 """End-to-end: launch the real server entrypoint as a subprocess (the
 documented `python -m duck_server_spark.server` command) and drive both
-protocol ports."""
+protocol ports. The entrypoint marks the startup tables for Spark's
+in-memory columnar cache; the tests below pin what that must not
+change. They run in file order, so each first-touch test names a table
+no earlier test reads."""
 
 import os
 import socket
 import subprocess
 import sys
+import threading
 import time
 import urllib.request
 
@@ -38,7 +42,7 @@ def server_proc(sf_dir):
             "--sf-dir",
             sf_dir,
         ],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=env,
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
@@ -62,6 +66,85 @@ def server_proc(sf_dir):
     proc.wait(timeout=30)
 
 
+def _duck_rows(duck, sql):
+    return [tuple(None if v is None else str(v) for v in r) for r in duck.execute(sql).fetchall()]
+
+
+def test_timeout_during_first_scan_leaves_the_cache_whole(server_proc, duck):
+    """A statement cancelled by statement_timeout while its first scan of
+    lineitem fills the cache must leave no partial table behind: the
+    next scan counts every row."""
+    pg_port, _ = server_proc
+    c = PgClient("127.0.0.1", pg_port)
+    c.simple_query("SET statement_timeout = '200ms'")
+    with pytest.raises(RuntimeError, match="57014"):
+        c.simple_query(
+            "SELECT sum(a.l_linenumber * b.l_linenumber) AS s FROM lineitem a CROSS JOIN lineitem b"
+        )
+    c.simple_query("SET statement_timeout = 0")
+    sql = "SELECT count(*) AS n, sum(l_orderkey) AS s FROM lineitem"
+    for _ in range(2):
+        _, rows, _ = c.simple_query(sql)
+        assert rows == _duck_rows(duck, sql)
+    c.terminate()
+
+
+def test_startup_tables_are_served_from_the_cache(server_proc, duck):
+    """A key lookup plans over the in-memory scan, and lookups, a
+    GROUP BY and a three-table join answer DuckDB's rows both on the run
+    that fills the cache and on a repeat."""
+    pg_port, _ = server_proc
+    (key,) = duck.execute("SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 1 OFFSET 700").fetchone()
+    lookup = (
+        "SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority "
+        f"FROM orders WHERE o_orderkey = {key}"
+    )
+    c = PgClient("127.0.0.1", pg_port)
+    _, rows, _ = c.simple_query(f"EXPLAIN {lookup}")
+    assert "Scan In-memory table orders" in rows[0][0], rows[0][0]
+    statements = [
+        lookup,
+        "SELECT l_returnflag, count(*) AS n, sum(l_orderkey) AS s FROM lineitem "
+        "GROUP BY l_returnflag ORDER BY l_returnflag",
+        "SELECT n_name, count(*) AS n, sum(o_orderkey) AS s FROM customer "
+        "JOIN orders ON c_custkey = o_custkey JOIN nation ON c_nationkey = n_nationkey "
+        "GROUP BY n_name ORDER BY n_name",
+    ]
+    for _ in range(2):
+        for sql in statements:
+            _, rows, _ = c.simple_query(sql)
+            assert rows == _duck_rows(duck, sql), sql
+    c.terminate()
+
+
+def test_concurrent_first_touch_of_one_table(server_proc, duck):
+    """Three connections whose first statement fills the same table's
+    cache at the same moment all get the whole table."""
+    pg_port, _ = server_proc
+    sql = "SELECT p_size, count(*) AS n, sum(p_partkey) AS s FROM part GROUP BY p_size ORDER BY p_size"
+    clients = [PgClient("127.0.0.1", pg_port) for _ in range(3)]
+    start = threading.Barrier(len(clients))
+    results, errors = {}, []
+
+    def run(i, c):
+        try:
+            start.wait()
+            results[i] = c.simple_query(sql)[1]
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i, c)) for i, c in enumerate(clients)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not errors, errors
+    expected = _duck_rows(duck, sql)
+    assert [results.get(i) for i in range(3)] == [expected] * 3
+    for c in clients:
+        c.terminate()
+
+
 def test_both_protocols_serve_fixture_queries(server_proc):
     pg_port, ch_port = server_proc
     # ClickHouse HTTP
@@ -75,4 +158,20 @@ def test_both_protocols_serve_fixture_queries(server_proc):
         "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY 1"
     )
     assert len(rows) == 3 and tag == "(3 row)"
+    c.terminate()
+
+
+def test_replaced_and_dropped_startup_view_serve_no_cached_rows(server_proc):
+    """The cache is keyed by plan, so a replaced startup view answers
+    with its new rows and a dropped one is gone."""
+    pg_port, _ = server_proc
+    c = PgClient("127.0.0.1", pg_port)
+    _, rows, _ = c.simple_query("SELECT count(*) AS n FROM region")
+    assert rows == [("5",)]
+    c.simple_query("CREATE OR REPLACE TEMP VIEW region AS SELECT 42 AS r_regionkey")
+    _, rows, _ = c.simple_query("SELECT * FROM region")
+    assert rows == [("42",)]
+    c.simple_query("DROP VIEW region")
+    with pytest.raises(RuntimeError, match="region"):
+        c.simple_query("SELECT * FROM region")
     c.terminate()
