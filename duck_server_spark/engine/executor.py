@@ -512,6 +512,9 @@ class Engine:
         # names such a view errors if a referenced macro was dropped and
         # re-bakes the view if one was redefined (engine/macros.py)
         self._check_macro_views(q, dialect)
+        # CREATE OR REPLACE VIEW of a temp view's name replaces that view
+        # (also on COMMIT replay and macro re-bake, which enter here)
+        q = self._temp_view_ddl(q) or q
         # macro expansion FIRST: bodies are DuckDB-dialect text and get
         # the full shim treatment below after inlining (engine/macros.py)
         from duck_server_spark.engine.macros import expand_calls
@@ -660,8 +663,8 @@ class Engine:
     )
 
     _CREATE_VIEW_HEAD = re.compile(
-        r"^\s*create\s+(?:or\s+replace\s+)?(?:temp(?:orary)?\s+)?view\s+"
-        r"(?:if\s+not\s+exists\s+)?(?P<name>[\w.`\"]+)\s*"
+        r"^\s*create\s+(?P<replace>or\s+replace\s+)?(?P<temp>temp(?:orary)?\s+)?"
+        r"(?P<view>view)\s+(?P<ine>if\s+not\s+exists\s+)?(?P<name>[\w.`\"]+)\s*"
         r"(?P<cols>\([^)]*\)\s*)?as\s+(?P<body>.+?);?\s*$",
         re.IGNORECASE | re.DOTALL,
     )
@@ -669,6 +672,31 @@ class Engine:
         r"^\s*drop\s+view\s+(?:if\s+exists\s+)?(?P<name>[\w.`\"]+)\s*;?\s*$",
         re.IGNORECASE,
     )
+
+    def _temp_view_ddl(self, q: str) -> str | None:
+        """A CREATE VIEW without TEMP whose unqualified name is a session
+        temp view (a --sf-dir startup table, which the catalog lists as
+        a view) acts on that view, as in DuckDB's one namespace: OR
+        REPLACE replaces it (the TEMP spelling is returned), IF NOT
+        EXISTS keeps it (None), and a plain CREATE is 42P07. Spark would
+        instead create a catalog view that the temp view shadows. Any
+        other statement is returned unchanged."""
+        m = self._CREATE_VIEW_HEAD.match(q)
+        if m is None or m.group("temp") or "." in m.group("name"):
+            return q
+        name = m.group("name").strip('`"')
+        try:
+            if not self.spark.catalog.getTable(name).isTemporary:
+                return q
+        except Exception:  # noqa: BLE001 — no such relation
+            return q
+        if m.group("replace"):
+            return f"{q[: m.start('view')]}TEMP {q[m.start('view') :]}"
+        if m.group("ine"):
+            return None
+        from duck_server_spark.engine.errors import PgError
+
+        raise PgError("42P07", f'Catalog Error: View with name "{name}" already exists!')
 
     def _register_macro_view(self, q: str) -> None:
         """After a successful CREATE VIEW: record macro dependencies (or
@@ -3358,6 +3386,9 @@ class Engine:
         if m and self.constraints.get(m.group(1)):
             n = self._validated_insert(m.group(1), m.group(2), m.group(3))
             return f"INSERT 0 {n}"
+        q = self._temp_view_ddl(q)
+        if q is None:  # CREATE VIEW IF NOT EXISTS of a temp view
+            return "CREATE"
         prepared = self._prepare_sql(q, dialect)
         tag = self._exec_asof_guarded(prepared)
         if tag is not None:

@@ -20,17 +20,20 @@ Scale notes (100 TB design intent):
   task on CPython 3.11 (~150 ms of a one-row task's ~250 ms, 4 vCPUs).
   They get this package on their path whatever the caller's working
   directory.
-- The server entrypoint (server/__main__.py) marks its --sf-dir startup
-  tables for Spark's in-memory columnar cache, lazily and MEMORY_ONLY:
-  the first statement on a table fills it, later ones read column
-  batches instead of decoding parquet, and a table too big for the heap
-  falls back to parquet scans. register_views itself caches nothing, so
-  the operators, bench.py and the plan audit keep their parquet scans.
+- The server entrypoint (server/__main__.py) registers its --sf-dir
+  startup tables sorted within partitions by their leading column and
+  marks them for Spark's in-memory columnar cache, lazily and
+  MEMORY_ONLY: the first statement on a table fills it, later ones read
+  column batches instead of decoding parquet and skip the batches a key
+  filter rules out, and a table too big for the heap is recomputed from
+  parquet. register_views itself neither sorts nor caches, so the
+  operators, bench.py and the plan audit keep their parquet scans.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -221,25 +224,37 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
+def register_views(
+    spark: SparkSession,
+    sf_dir: str,
+    view_of: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
     """Register every fixture table as a temp view (name == table name).
 
     Parquet-backed temp views keep predicate pushdown / column pruning —
     Catalyst sees straight through the view to the file scan.
 
+    view_of, when given, maps each table's parquet frame to the frame
+    its view serves; the server entrypoint clusters its startup tables
+    this way before caching them (server/__main__.py). Such a call
+    always registers.
+
     Memoized per (session, sf_dir) — round 13 (guide §1.2 per-task
     work): the 10 createOrReplaceTempView py4j round-trips cost ~96 ms
     warm, and every operator builder calls this, so a 25-query bench
-    paid ~5 s of pure view re-registration. Re-registering is only
-    needed when the SAME session switches fixture dirs (the comparison
-    below); nothing in the engine ever drops or shadows fixture-named
-    temp views (the executor's transient views are all __duck_*-named).
+    paid ~5 s of pure view re-registration. The memo only records which
+    dir was registered last. The executor's transient views are all
+    __duck_*-named, but a client's CREATE OR REPLACE VIEW (or TEMP VIEW)
+    and DROP VIEW of a fixture name replace or drop that view, and a
+    later call for the same dir does not restore it: drop
+    session_store(spark)["views_dir"] first to force a re-register.
     """
     store = session_store(spark)
-    if store.get("views_dir") == sf_dir:
+    if view_of is None and store.get("views_dir") == sf_dir:
         return
     for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+        df = load_table(spark, sf_dir, t)
+        (df if view_of is None else view_of(df)).createOrReplaceTempView(t)
     store["views_dir"] = sf_dir
     # DuckDB-named pandas-UDF scalars (damerau_levenshtein, jaro_*) —
     # registered here too so sessions we didn't build (the verification

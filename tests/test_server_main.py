@@ -1,9 +1,10 @@
 """End-to-end: launch the real server entrypoint as a subprocess (the
 documented `python -m duck_server_spark.server` command) and drive both
-protocol ports. The entrypoint marks the startup tables for Spark's
-in-memory columnar cache; the tests below pin what that must not
-change. They run in file order, so each first-touch test names a table
-no earlier test reads."""
+protocol ports. The entrypoint registers the startup tables sorted by
+their leading column and marks them for Spark's in-memory columnar
+cache; the tests below pin what that must not change. They run in file
+order, so each first-touch test names a table no earlier test reads.
+The last test checks the cache's batch skipping in process."""
 
 import os
 import socket
@@ -145,6 +146,36 @@ def test_concurrent_first_touch_of_one_table(server_proc, duck):
         c.terminate()
 
 
+def test_clustered_key_reads_match_duckdb(server_proc, duck):
+    """The startup tables are cached sorted by their leading column, so
+    a key read skips batches; a lineitem key-range read and l_orderkey
+    lookup (lineitem was filled by the first test) and an events one
+    (its first touch, so the filling run) answer DuckDB's rows, on the
+    first run and on a repeat."""
+    pg_port, _ = server_proc
+    statements = []
+    for table, key, cols in (
+        ("lineitem", "l_orderkey", "l_orderkey, l_linenumber, l_partkey, l_suppkey"),
+        ("events", "event_id", "event_id, user_id"),
+    ):
+        lo, hi, one = duck.execute(
+            f"SELECT quantile_disc({key}, 0.4), quantile_disc({key}, 0.45), "
+            f"quantile_disc({key}, 0.7) FROM {table}"
+        ).fetchone()
+        order = cols.split(", ", 2)[:2]
+        statements += [
+            f"SELECT {cols} FROM {table} WHERE {key} BETWEEN {lo} AND {hi} "
+            f"ORDER BY {', '.join(order)}",
+            f"SELECT {cols} FROM {table} WHERE {key} = {one} ORDER BY {', '.join(order)}",
+        ]
+    c = PgClient("127.0.0.1", pg_port)
+    for _ in range(2):
+        for sql in statements:
+            _, rows, _ = c.simple_query(sql)
+            assert rows and rows == _duck_rows(duck, sql), sql
+    c.terminate()
+
+
 def test_both_protocols_serve_fixture_queries(server_proc):
     pg_port, ch_port = server_proc
     # ClickHouse HTTP
@@ -175,3 +206,73 @@ def test_replaced_and_dropped_startup_view_serve_no_cached_rows(server_proc):
     with pytest.raises(RuntimeError, match="region"):
         c.simple_query("SELECT * FROM region")
     c.terminate()
+
+
+def test_create_view_over_a_startup_table_acts_on_it(server_proc):
+    """The catalog lists the startup tables as views, so CREATE VIEW
+    with their name acts on them as DuckDB would: a plain CREATE is
+    "already exists", IF NOT EXISTS keeps the table, and OR REPLACE is
+    served at once (Spark alone would make a catalog view that the
+    startup temp view shadows)."""
+    pg_port, _ = server_proc
+    c = PgClient("127.0.0.1", pg_port)
+    with pytest.raises(RuntimeError, match="already exists"):
+        c.simple_query("CREATE VIEW nation AS SELECT 1 AS n_nationkey")
+    c.simple_query("CREATE VIEW IF NOT EXISTS nation AS SELECT 1 AS n_nationkey")
+    _, rows, _ = c.simple_query("SELECT count(*) AS n FROM nation")
+    assert rows == [("25",)]
+    c.simple_query("CREATE OR REPLACE VIEW nation AS SELECT 42 AS n_nationkey")
+    _, rows, _ = c.simple_query("SELECT * FROM nation")
+    assert rows == [("42",)]
+    c.simple_query("DROP VIEW nation")
+    with pytest.raises(RuntimeError, match="nation"):
+        c.simple_query("SELECT * FROM nation")
+    c.terminate()
+
+
+def _plan_nodes(plan):
+    """Every node of an executed physical plan, through AQE's wrappers."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+    else:
+        children = plan.children()
+        for i in range(children.size()):
+            yield from _plan_nodes(children.apply(i))
+
+
+def test_clustered_cache_skips_batches_of_a_key_range_read(spark, sf_dir):
+    """In process, the entrypoint's registration over sf0.01: a lineitem
+    key-range read decodes one 10k-row cached batch, not the table's
+    60,000 rows (l_orderkey is not sorted in the files). The fixture
+    views are restored and uncached afterwards, so later tests plan
+    parquet scans again."""
+    from duck_server_spark.engine.session import TABLES, register_views, session_store
+    from duck_server_spark.server.__main__ import register_startup_tables
+
+    before = session_store(spark).get("views_dir")
+    register_startup_tables(spark, "/root/testdata/sf0.01")
+    try:
+        lo, hi = spark.sql(
+            "SELECT percentile_disc(0.4) WITHIN GROUP (ORDER BY l_orderkey), "
+            "percentile_disc(0.41) WITHIN GROUP (ORDER BY l_orderkey) FROM lineitem"
+        ).first()
+        df = spark.sql(f"SELECT * FROM lineitem WHERE l_orderkey BETWEEN {lo} AND {hi}")
+        assert len(df.collect()) > 0
+        scanned = [
+            int(n.metrics().apply("numOutputRows").value())
+            for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "InMemoryTableScanExec"
+        ]
+        assert scanned and sum(scanned) <= 10_000, scanned
+    finally:
+        for t in TABLES:
+            spark.catalog.uncacheTable(t)
+        session_store(spark).pop("views_dir", None)
+        register_views(spark, before or sf_dir)
+    plan = spark.sql("SELECT * FROM lineitem WHERE l_orderkey = 1")._jdf.queryExecution()
+    assert "FileScan parquet" in plan.executedPlan().toString()
+    assert not any(spark.catalog.isCached(t) for t in TABLES)
